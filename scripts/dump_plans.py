@@ -20,8 +20,8 @@ from sftp_data_ingestion_spark import queries as q
 from sftp_data_ingestion_spark.session import get_spark
 
 NOTES = {
-    "pedidos_pipeline_flagship": "two shuffles total (dedup window + merge join, both on chave_nfe); the clean cascade is TWO Projects in one codegen stage (gated regex extractions aliased inner, gated outer -> each extraction evaluated once)",
-    "u1_upsert_newer_wins": "full-outer merge on the key; no extra exchange beyond the join",
+    "pedidos_pipeline_flagship": "two shuffles total (fan_out rebalance + dedup window on chave_nfe); the clean cascade is TWO Projects in one codegen stage (gated regex extractions aliased inner, gated outer -> each extraction evaluated once)",
+    "u1_upsert_newer_wins": "left-outer merge (delta broadcast) + left-anti insert branch (DW key column broadcast); zero shuffles, no Exchange above the full-width DW scan",
     "w1_latest_event_per_user": "single shuffle (WindowGroupLimit pushes rank<=1 map-side)",
     "g_q1_pricing_summary": "scan + partial/final agg; PushedFilters carries the date bound",
     "j_revenue_by_nation": "small dims broadcast; one fact shuffle",

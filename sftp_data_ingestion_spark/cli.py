@@ -65,12 +65,9 @@ def cmd_load(spark: SparkSession, args) -> dict:
 def cmd_upsert(spark: SparkSession, args) -> dict:
     from pyspark.sql.utils import AnalysisException
 
-    from sftp_data_ingestion_spark.operators.clean import clean_staging
-    from sftp_data_ingestion_spark.operators.pipeline import (
-        run_upsert_pipeline,
-    )
-
     from sftp_data_ingestion_spark.io.sinks import recover_interrupted_swap
+    from sftp_data_ingestion_spark.operators.clean import clean_staging
+    from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
 
     p = _paths(args.warehouse)
     try:
@@ -86,14 +83,9 @@ def cmd_upsert(spark: SparkSession, args) -> dict:
         dw = spark.read.parquet(p["dw"])
     except AnalysisException:
         dw = clean_staging(staging).limit(0)
-
-    from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet
-
-    new_dw = run_upsert_pipeline(dw, staging)
     # crash-safe rewrite: full result to a temp dir, then swap (the
     # Delta MERGE equivalent on plain parquet)
-    n = atomic_swap_parquet(new_dw, p["dw"])
-    return {"dw_rows": n}
+    return {"dw_rows": upsert_and_swap(dw, staging, p["dw"])}
 
 
 def _upsert_bucketed(spark: SparkSession, p: dict, staging, buckets: int) -> dict:

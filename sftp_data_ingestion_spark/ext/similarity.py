@@ -962,6 +962,8 @@ def ivf_topk(
     arrow engine also narrows the id contract: ``neighbor_id`` comes
     back as long (int64 kernel) and non-integral id columns raise
     TypeError up front."""
+    if not centroids:
+        raise ValueError("ivf_topk: centroids is empty — need at least one cell")
     if dim is None:
         dim = len(centroids[0])
     if corpus_engine == "arrow" and nprobe < len(centroids):

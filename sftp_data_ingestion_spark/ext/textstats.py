@@ -131,21 +131,6 @@ def rolling_fingerprint_sql(e: str) -> str:
     )
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full stat column set (one Project node)."""
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t),
-            "n_distinct_tokens": distinct_token_count(t),
-            "n_chars_computed": F.length(t),
-            "bpe_ish_tokens": bpe_ish_token_count(t),
-            "lang_id": language_id(t),
-            "quality": quality_score(t),
-        }
-    )
-
-
 def tfidf_top_terms(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -17,9 +17,9 @@ Reference behavior (``/root/reference/python/02_load_stage_pedidos.py:115-167``)
 Spark design: header + sniff happen driver-side on the file HEAD only
 (a few KB — same work the reference does, and per-file parameters like
 the separator genuinely vary per file). The body parse is distributed:
-one ``spark.read`` per (encoding, separator, header) group, lines
-split with a quote-aware regex and repaired as pure Column
-expressions. At 249 files/batch (BASELINE.md) groups collapse to a
+one ``spark.read`` per (encoding, separator, header) group, each line
+split once (quote-aware only when it holds a ``"``) and repaired as
+pure Column expressions. At 249 files/batch (BASELINE.md) groups collapse to a
 handful of scans; at 100 TB the same grouping bounds scan count while
 each scan parallelizes by file/block.
 
@@ -34,9 +34,9 @@ from __future__ import annotations
 import codecs
 import csv
 import io as _io
-import os
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -217,15 +217,22 @@ def read_lines(
     return df
 
 
-def _has_multiline_quoted_fields(lines: DataFrame) -> bool:
+def _n_quotes() -> Column:
+    return F.length("value") - F.length(F.replace("value", F.lit('"'), F.lit("")))
+
+
+def _has_multiline_quoted_fields(parts: list[DataFrame]) -> list[bool]:
     """Cheap detector for quoted fields containing newlines: a record
     that spans physical lines necessarily leaves a line with an ODD
     number of quote chars (doubled "" escapes count 2 and keep parity
-    even). One column-pruned pass with an early-exit limit."""
-    n_quotes = F.length("value") - F.length(
-        F.replace(F.col("value"), F.lit('"'), F.lit(""))
+    even). One flag per frame, from one column-pruned job."""
+    odd = reduce(
+        DataFrame.union,
+        [p.where(_n_quotes() % 2 == 1).select(F.lit(i).alias("i"))
+         for i, p in enumerate(parts)],
     )
-    return not lines.where(n_quotes % 2 == 1).isEmpty()
+    hit = set(odd.agg(F.collect_set("i")).first()[0])
+    return [i in hit for i in range(len(parts))]
 
 
 def _scan_quote_state(
@@ -312,52 +319,61 @@ def read_records_multiline(
     return df.mapInPandas(gen, "value string")
 
 
-def parse_lines(
-    lines: DataFrame, sep: str, header: list[str], header_line: str
-) -> DataFrame:
-    """S6b-d as Column expressions: blank filter, header drop,
-    quote-aware split, unquote, ragged repair, project to raw headers."""
-    n = len(header)
-    split_re = re.escape(sep) + _QUOTE_AWARE
+def _quote_aware_split(sep: str) -> Column:
+    """csv.reader cell boundaries of ``value``, quotes still on."""
     # stray-quote fallback: the balanced-quote lookahead refuses to
     # split any separator ahead of an unpaired quote, collapsing the
     # whole prefix into one cell. csv.reader treats a mid-field quote
     # as a literal char and splits every separator — so for the (rare)
     # odd-quote record, split plain. Joined multi-line records always
     # have balanced quotes, so they never take this branch.
-    n_quotes = F.length("value") - F.length(
-        F.replace(F.col("value"), F.lit('"'), F.lit(""))
-    )
-    cells = F.when(
-        n_quotes % 2 == 1, F.split(F.col("value"), re.escape(sep))
-    ).otherwise(F.split(F.col("value"), split_re))
-    # ragged repair on parsed cells (02:150-156): overflow cells are
-    # UNQUOTED first, then re-joined with the separator — matching the
-    # reference, which joins csv-parsed cells
-    fixed = F.when(
+    return F.when(
+        _n_quotes() % 2 == 1, F.split("value", re.escape(sep))
+    ).otherwise(F.split("value", re.escape(sep) + _QUOTE_AWARE))
+
+
+def _unquote_repair(cells: Column, sep: str, n: int) -> Column:
+    """Unquote split cells, then the ragged repair (02:150-156):
+    overflow cells are UNQUOTED first, then re-joined with the
+    separator — matching the reference, which joins csv-parsed cells."""
+    unquoted = F.transform(cells, _unquote)
+    return F.when(
         F.size(cells) > n,
         F.concat(
-            F.slice(F.transform(cells, _unquote), 1, n - 1),
-            F.array(
-                F.concat_ws(
-                    sep,
-                    F.slice(
-                        F.transform(cells, _unquote), n, F.size(cells) - n + 1
-                    ),
-                )
-            ),
+            F.slice(unquoted, 1, n - 1),
+            F.array(F.concat_ws(sep, F.slice(unquoted, n, F.size(cells) - n + 1))),
         ),
-    ).otherwise(F.transform(cells, _unquote))
-    out = (
+    ).otherwise(unquoted)
+
+
+def parse_lines(
+    lines: DataFrame, sep: str, header: list[str], header_line: str
+) -> DataFrame:
+    """S6b-d as Column expressions: blank filter, header drop,
+    quote-aware split, unquote, ragged repair, project to raw headers.
+    Each line is split once; a quote-free line takes a plain split whose
+    limit ``n`` folds the overflow into the last cell, joined by the
+    separator — exactly the ragged repair."""
+    n = len(header)
+    quoted = F.col("value").contains('"')
+    return (
         # S6c: drop rows whose every CELL is blank (the reference's
         # any(cell.strip()) test — ";;;;;" rows count as blank too)
-        lines.where(
-            F.exists(F.split(F.col("value"), split_re), lambda c: F.trim(c) != "")
-        )
+        lines.where(F.trim(F.replace("value", F.lit(sep), F.lit(""))) != "")
         # drop header row(s); the BOM variant covers utf-8-sig files
         # whose first distributed line still carries U+FEFF
-        .where(~F.col("value").isin(header_line, "﻿" + header_line))
-        .select(fixed.alias("c"))
+        .where(~F.col("value").isin(header_line, "\ufeff" + header_line))
+        .select(
+            quoted.alias("quoted"),
+            F.when(quoted, _quote_aware_split(sep))
+            .otherwise(F.split("value", re.escape(sep), n))
+            .alias("cells"),
+        )
+        .select(
+            F.when(F.col("quoted"), _unquote_repair(F.col("cells"), sep, n))
+            .otherwise(F.col("cells"))
+            .alias("c")
+        )
         .select(
             # try_element_at: short rows pad with "" (ANSI element_at
             # would throw on the out-of-bounds index)
@@ -367,7 +383,6 @@ def parse_lines(
             ]
         )
     )
-    return out
 
 
 def read_csv_robust(
@@ -376,17 +391,23 @@ def read_csv_robust(
     """Read one file (or one GROUP of same-plan files) into the raw
     header-named frame, then conform to the 40-col staging projection
     with lineage (P1/P2/S11)."""
-    plans = [plan] if isinstance(plan, FilePlan) else plan
-    p0 = plans[0]
-    paths = [p.path for p in plans]
-    lines = read_lines(spark, paths, p0.encoding)
-    if _has_multiline_quoted_fields(lines):
-        # rare dirty batch: re-read with csv.reader record semantics
-        lines = read_records_multiline(spark, paths, p0.encoding, p0.sep)
-    raw = parse_lines(lines, p0.sep, p0.header, p0.header_line)
+    return _read_groups(spark, [[plan] if isinstance(plan, FilePlan) else plan])
+
+
+def _read_groups(spark: SparkSession, groups: list[list[FilePlan]]) -> DataFrame:
+    """:func:`read_csv_robust` of each group, unioned; one job checks
+    every group for multi-line quoted fields."""
     from sftp_data_ingestion_spark.operators.conform import with_lineage
 
-    return with_lineage(conform_headers(raw))
+    lines = [read_lines(spark, [p.path for p in g], g[0].encoding) for g in groups]
+    parts = []
+    for g, ln, multiline in zip(groups, lines, _has_multiline_quoted_fields(lines)):
+        p0 = g[0]
+        if multiline:  # rare dirty batch: re-read with csv.reader record semantics
+            ln = read_records_multiline(spark, [p.path for p in g], p0.encoding, p0.sep)
+        raw = parse_lines(ln, p0.sep, p0.header, p0.header_line)
+        parts.append(with_lineage(conform_headers(raw)))
+    return reduce(DataFrame.unionByName, parts)
 
 
 def load_landing_batch(
@@ -402,8 +423,4 @@ def load_landing_batch(
     for p in plans:
         if p.valid:
             groups.setdefault(p.group_key, []).append(p)
-    df: DataFrame | None = None
-    for group in groups.values():
-        part = read_csv_robust(spark, group)
-        df = part if df is None else df.unionByName(part)
-    return df, plans
+    return (_read_groups(spark, list(groups.values())) if groups else None), plans

@@ -9,7 +9,9 @@ listing and local basenames (:110-114), repeated in stage 2 against the
 
 Spark design: the directory-as-state-machine becomes a LEDGER table
 (parquet; Delta in production) with one row per processed file; the set
-difference becomes a ``left_anti`` join (J3). The network fetch itself
+difference (J3) runs on the driver against the ledger's collected name
+column — a listing is a few hundred names, so shipping it to Spark
+would cost more than it saves. The network fetch itself
 stays out of Spark (a driver/connector concern, exactly as the
 reference runs it as its own process); ``RetryingFetcher`` carries the
 reference's verify+retry semantics behind a pluggable transport so it
@@ -29,6 +31,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sftp_data_ingestion_spark.schemas import empty_frame
 
 LEDGER_SCHEMA = T.StructType(
     [
@@ -77,27 +81,20 @@ def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     try:
         return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
     except Exception:  # noqa: BLE001 — first run: no ledger yet
-        return spark.createDataFrame([], LEDGER_SCHEMA)
+        return empty_frame(spark, LEDGER_SCHEMA)
 
 
 def new_files(
     spark: SparkSession, listing: list[str], ledger: DataFrame
 ) -> list[str]:
-    """S3/S10: anti-join the listing against processed basenames
-    (lowercased, as the reference compares). Returns full paths in
-    deterministic order."""
+    """S3/S10: set difference of the listing against processed
+    basenames (lowercased, as the reference compares). The ledger side
+    is one collected column; the listing never leaves the driver.
+    Returns full paths in deterministic order."""
     if not listing:
         return []
-    listing_df = spark.createDataFrame(
-        [(p, os.path.basename(p).lower()) for p in listing],
-        "path string, filename string",
-    )
-    fresh = listing_df.join(
-        ledger.select(F.lower("filename").alias("filename")).distinct(),
-        "filename",
-        "left_anti",
-    )
-    return sorted(r["path"] for r in fresh.collect())
+    seen = {r[0] for r in ledger.select(F.lower("filename")).collect()}
+    return sorted(p for p in listing if os.path.basename(p).lower() not in seen)
 
 
 def record_results(
@@ -106,9 +103,12 @@ def record_results(
     entries: list[dict],
     batch_id: str,
 ) -> None:
-    """Append one ledger row per processed file."""
+    """Append one ledger row per processed file (from pandas, so the
+    rows reach the JVM over Arrow, not through a Python worker)."""
     if not entries:
         return
+    import pandas as pd
+
     rows = [
         (
             os.path.basename(e["path"]),
@@ -119,19 +119,14 @@ def record_results(
         )
         for e in entries
     ]
+    pdf = pd.DataFrame(
+        rows, columns=["filename", "status", "reason", "rows_loaded", "batch_id"]
+    )
     df = spark.createDataFrame(
-        rows, "filename string, status string, reason string, "
+        pdf, "filename string, status string, reason string, "
         "rows_loaded long, batch_id string"
     ).withColumn("processed_ts", F.current_timestamp())
     df.write.mode("append").parquet(ledger_path)
-
-
-def ledger_stats(ledger: DataFrame) -> DataFrame:
-    """G3 run metrics: files + rows per status."""
-    return ledger.groupBy("status").agg(
-        F.count(F.lit(1)).alias("n_files"),
-        F.sum("rows_loaded").alias("n_rows"),
-    )
 
 
 # ---------------------------------------------------------------------------

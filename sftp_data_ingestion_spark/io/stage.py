@@ -14,6 +14,7 @@ count keyed on a batch_id column.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import SparkSession
@@ -61,19 +62,12 @@ def load_stage(
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            loaded = df.where(
-                F.col("arquivo_origem").isin(
-                    [f for f, n in counts.items() if n > 0]
-                )
-            )
-            append_bronze(loaded, bronze_path)
+            append_bronze(df, bronze_path)
             rows_total = sum(counts.values())
         finally:
             df.unpersist()
 
     entries = []
-    import os
-
     for p in plans:
         base = os.path.basename(p.path)
         n = counts.get(base, 0)

@@ -24,6 +24,8 @@ import uuid
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.schemas import empty_frame
+
 
 def _batch_already_archived(
     spark: SparkSession, hist_path: str, batch_id: str
@@ -118,7 +120,7 @@ def move_to_archive(
                     f"but staging holds different content ({stg_n} rows); "
                     "batch_id must be unique per batch"
                 )
-            empty = spark.createDataFrame([], staging.schema)
+            empty = empty_frame(spark, staging.schema)
             empty.write.mode("overwrite").parquet(staging_path)
             return {"moved": 0, "batch_id_rows": 0}
         obs = Observation("archive_counts")
@@ -130,7 +132,7 @@ def move_to_archive(
         stamped.write.mode("append").parquet(hist_path)
         n = int(obs.get["rows"])
         # clear staging only after hist append landed (at-least-once)
-        empty = spark.createDataFrame([], staging.schema)
+        empty = empty_frame(spark, staging.schema)
         empty.write.mode("overwrite").parquet(staging_path)
         return {"moved": n, "batch_id_rows": n}
     finally:

@@ -17,12 +17,15 @@ policies:
 * **fill-the-blanks** — every other column ``COALESCE(new, old)``: a new
   non-NULL wins, a NULL never un-sets.
 
-Spark shape: one full-outer equi-join on the unique key + a per-column
-policy Project. Catalyst/AQE picks broadcast vs sort-merge (a small
-delta side broadcasts automatically); at 100 TB the DW table would be a
-Delta table and this exact expression set becomes the
-``WHEN MATCHED THEN UPDATE SET`` clause of ``MERGE INTO`` — the policy
-generator below is the reusable piece.
+Spark shape: ``dw LEFT OUTER JOIN delta`` + policy Project, unioned
+with the new keys from ``delta LEFT ANTI JOIN dw.select(key)``. Unlike
+a full-outer join, both can broadcast their right side, so Catalyst/AQE
+never exchange the full-width DW while the delta broadcasts. When
+neither side broadcasts, an unbucketed DW pays one extra key-only DW
+shuffle (the anti join's) on top of the sort-merge join's full-width
+one; a key-bucketed DW pays neither. At 100 TB the DW table would be a Delta table and this exact
+expression set becomes the ``WHEN MATCHED THEN UPDATE SET`` clause of
+``MERGE INTO`` — the policy generator below is the reusable piece.
 
 Precondition (U3): ``delta`` has at most one row per key — enforce with
 :func:`sftp_data_ingestion_spark.operators.dedup.latest_per_key`, same
@@ -55,16 +58,14 @@ def upsert_newer_wins(
     NULL-key delta rows are dropped here, mirroring the reference's
     ``WHERE r.chave_nfe IS NOT NULL`` gate
     (/root/reference/python/03_upsert_dw_pedidos.py:200): in a
-    full-outer equi-join a NULL key can never match, so without the
+    key equi-join a NULL key can never match, so without the
     filter every run would insert its NULL-key rows as fresh DW rows
     and break the one-row-per-key invariant (U2).
+    An unmatched DW row needs no branch: ``COALESCE(NULL, old)``,
+    ``GREATEST(old, NULL)`` and ``NULL > old`` all keep ``old``.
     """
     o = dw.alias("o")
     n = delta.where(F.col(key).isNotNull()).select(dw.columns).alias("n")
-    joined = o.join(n, F.col(f"o.{key}") == F.col(f"n.{key}"), "full_outer")
-
-    inserted = F.col(f"o.{key}").isNull()  # key only in delta -> insert row
-    deleted_side = F.col(f"n.{key}").isNull()  # key only in dw -> keep row
     newer = F.col(f"n.{newer_col}") > F.col(f"o.{newer_col}")  # NULL -> false
 
     def policy(c: str) -> Column:
@@ -77,8 +78,10 @@ def upsert_newer_wins(
             merged = F.greatest(old, new)
         else:
             merged = F.coalesce(new, old)
-        return (
-            F.when(inserted, new).when(deleted_side, old).otherwise(merged).alias(c)
-        )
+        return merged.alias(c)
 
-    return joined.select([policy(c) for c in dw.columns])
+    kept = o.join(n, F.col(f"o.{key}") == F.col(f"n.{key}"), "left_outer")
+    inserted = n.join(dw.select(key), key, "left_anti")
+    return kept.select([policy(c) for c in dw.columns]).union(
+        inserted.select(dw.columns)
+    )

@@ -6,20 +6,22 @@ whole staging table, rank per ``chave_nfe``, keep ``rn = 1`` and
 ``chave_nfe IS NOT NULL`` (:200-201), then upsert into the typed DW.
 This module chains the four operators into that exact shape, so the
 whole run is ONE Catalyst plan: Project (clean, codegen'd) -> Window
-(single shuffle on ``chave_nfe``) -> Filter -> full-outer Join (second
-shuffle, same key — AQE reuses/broadcasts as sizes allow).
+(single shuffle on ``chave_nfe``) -> Filter -> the merge's left-outer
+and left-anti joins (operators/merge.py).
 
-Scale notes (SURVEY.md §4.3): exactly two shuffles, both on
-``chave_nfe``; the NULL-key filter runs *after* dedup (reference
-ordering — NULL-key rows still consume window slots there) but before
-the merge join, so NULL keys never hit the join.
+Scale notes (SURVEY.md §4.3): while the batch fits the broadcast
+threshold, the dedup window is the only shuffle; the NULL-key filter
+runs before the merge joins, so NULL keys never hit them.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet
 from sftp_data_ingestion_spark.operators.clean import clean_staging
 from sftp_data_ingestion_spark.operators.dedup import dedup_latest_pedidos
 from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
@@ -54,6 +56,17 @@ def staging_to_delta(
     return dedup_latest_pedidos(typed.where(F.col("chave_nfe").isNotNull()))
 
 
+# stage 3's column policies (reference 03:202-246)
+_upsert_pedidos = partial(
+    upsert_newer_wins,
+    key="chave_nfe",
+    newer_col="data_ultima_ocr",
+    newer_wins_cols=NEWER_WINS_COLS,
+    greatest_cols=("data_insercao",),
+    set_once_cols=SET_ONCE_COLS,
+)
+
+
 def run_upsert_pipeline(
     dw: DataFrame,
     staging: DataFrame,
@@ -66,13 +79,16 @@ def run_upsert_pipeline(
     COALESCE, GREATEST of equals is unchanged) — the reference's
     ON CONFLICT semantics (README.md:117-121).
     """
-    delta = staging_to_delta(staging, default_insercao=default_insercao)
-    return upsert_newer_wins(
-        dw,
-        delta,
-        key="chave_nfe",
-        newer_col="data_ultima_ocr",
-        newer_wins_cols=NEWER_WINS_COLS,
-        greatest_cols=("data_insercao",),
-        set_once_cols=SET_ONCE_COLS,
-    )
+    return _upsert_pedidos(dw, staging_to_delta(staging, default_insercao))
+
+
+def upsert_and_swap(dw: DataFrame, staging: DataFrame, path: str) -> int:
+    """:func:`run_upsert_pipeline` swapped in at ``path``; returns the new
+    DW row count. Both merge joins read the delta, with different column
+    sets, so it is persisted until the swap is done."""
+    delta = staging_to_delta(staging).persist()
+    try:
+        return atomic_swap_parquet(_upsert_pedidos(dw, delta), path)
+    finally:
+        delta.unpersist()
+

@@ -1,7 +1,7 @@
 """Partition-pruned upsert: the 100 TB scale path for U1/J4.
 
 :func:`sftp_data_ingestion_spark.operators.merge.upsert_newer_wins`
-is exact reference parity (full-outer join over the whole DW) but
+is exact reference parity (a merge over the whole DW) but
 rewrites O(DW) per merge — the known scale-killer when the DW is
 100 TB and a delta touches 0.1% of keys. The scale path here keeps the
 DW as a hash-bucketed partitioned layout and makes each merge

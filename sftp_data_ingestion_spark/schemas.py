@@ -16,8 +16,18 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """Zero-row, all-nullable frame of ``schema`` built in the JVM
+    (``createDataFrame([])`` starts Python workers)."""
+    return spark.range(0).select(
+        [F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
+    )
+
 
 # ---------------------------------------------------------------------------
 # staging zone: 41 string columns, fixed order
@@ -149,9 +159,3 @@ FIXTURE_TABLES = [
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one driver fixture table (column-pruned/pushed-down parquet)."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_fixture_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in FIXTURE_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -91,8 +91,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def testdata_dir(sf: str = "0.001") -> str:
-    """Path of the driver-generated synthetic tables for a scale factor."""
-    return os.environ.get("SPARK_GRAFT_SF_DIR", f"/root/testdata/sf{sf}")

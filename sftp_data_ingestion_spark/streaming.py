@@ -272,14 +272,9 @@ def stream_upsert_to_dw(
     """
     from pyspark.errors import AnalysisException
 
-    from sftp_data_ingestion_spark.io.sinks import (
-        atomic_swap_parquet,
-        recover_interrupted_swap,
-    )
+    from sftp_data_ingestion_spark.io.sinks import recover_interrupted_swap
     from sftp_data_ingestion_spark.operators.clean import clean_staging
-    from sftp_data_ingestion_spark.operators.pipeline import (
-        run_upsert_pipeline,
-    )
+    from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
 
     stream = stream_landing_csv(spark, landing_dir, sep, max_files_per_trigger)
 
@@ -292,7 +287,7 @@ def stream_upsert_to_dw(
             dw = s.read.parquet(dw_path)
         except AnalysisException:  # first batch: empty typed DW
             dw = clean_staging(batch_df).limit(0)
-        atomic_swap_parquet(run_upsert_pipeline(dw, batch_df), dw_path)
+        upsert_and_swap(dw, batch_df, dw_path)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

@@ -4,6 +4,10 @@ reference-shaped CSVs, plus full-idempotency on rerun."""
 
 import datetime as dt
 import json
+import os
+import shutil
+import subprocess
+import sys
 from decimal import Decimal
 
 from sftp_data_ingestion_spark.cli import main
@@ -85,6 +89,68 @@ def test_stage_commands_individually(spark, tmp_path):
     # archive retry with the same batch id: idempotent
     assert main(["archive", "--warehouse", wh, "--batch-id", "T1"]) == 0
     assert spark.read.parquet(f"{wh}/hist").count() == 4
+
+
+# Runs cmd_load + cmd_archive in a fresh session, then lists the
+# processes under this one that are PySpark Python workers (the daemon
+# or its forks).
+_NO_WORKER_PROBE = r"""
+import json, os, sys
+from types import SimpleNamespace
+
+from sftp_data_ingestion_spark.cli import cmd_archive, cmd_load
+from sftp_data_ingestion_spark.session import get_spark
+
+landing, wh = sys.argv[1:3]
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+out = {
+    "load": cmd_load(spark, SimpleNamespace(landing=landing, warehouse=wh)),
+    "archive": cmd_archive(spark, SimpleNamespace(warehouse=wh, batch_id="T1")),
+}
+parent, cmd = {}, {}
+for e in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        with open(f"/proc/{e}/stat") as f:
+            parent[int(e)] = int(f.read().rsplit(")", 1)[1].split()[1])
+        with open(f"/proc/{e}/cmdline", "rb") as f:
+            cmd[int(e)] = f.read().replace(b"\0", b" ").decode()
+    except OSError:
+        continue
+
+def under_me(pid):
+    while pid > 1:
+        pid = parent.get(pid, 0)
+        if pid == os.getpid():
+            return True
+    return False
+
+out["python_workers"] = [
+    c for p, c in cmd.items()
+    if under_me(p) and ("pyspark.daemon" in c or "pyspark.worker" in c)
+]
+print(json.dumps(out))
+"""
+
+
+def test_cron_load_and_archive_start_no_python_worker(tmp_path):
+    """A cold cron run of the load and archive stages plans every step
+    in the JVM: listing vs ledger, ledger append, empty-staging write.
+    A Python worker would cost the daemon start-up in every cron run."""
+    landing = tmp_path / "novos"
+    shutil.copytree(_setup_remote(tmp_path), landing)
+    (landing / "alien.csv").write_text("a;b\n1;2\n")  # fails the header gate
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _NO_WORKER_PROBE, str(landing), str(tmp_path / "wh")],
+        capture_output=True, text=True, env=env, cwd=repo, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    out = json.loads(res.stdout.strip().splitlines()[-1])
+    assert (out["load"]["files_ok"], out["load"]["files_error"]) == (2, 1)
+    assert out["load"]["rows_loaded"] == 4
+    assert out["archive"]["moved"] == 4
+    assert out["python_workers"] == []
 
 
 def test_upsert_without_bronze_is_noop(tmp_path):

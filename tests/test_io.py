@@ -283,6 +283,38 @@ def test_load_stage_end_to_end(spark, tmp_path):
     assert spark.read.parquet(args["bronze_path"]).count() == 2
 
 
+def test_new_files_case_insensitive_name_ordered(spark, tmp_path):
+    """S3/S10 contract: a listed file is new unless the ledger holds its
+    basename in any letter case; the result is in path order."""
+    from sftp_data_ingestion_spark.io.sources import (
+        new_files,
+        read_ledger,
+        record_results,
+    )
+
+    listing = [str(tmp_path / n) for n in ("b.CSV", "A.csv", "c.csv", "D.Csv")]
+    ledger_path = str(tmp_path / "ledger")
+    assert new_files(spark, listing, read_ledger(spark, ledger_path)) == sorted(
+        listing
+    )
+    record_results(
+        spark,
+        ledger_path,
+        [{"path": "/elsewhere/B.csv", "status": "ok", "rows_loaded": 3},
+         {"path": "x/d.CSV", "status": "error", "reason": "0 rows"}],
+        "b1",
+    )
+    ledger = read_ledger(spark, ledger_path)
+    assert new_files(spark, listing, ledger) == [
+        str(tmp_path / "A.csv"), str(tmp_path / "c.csv")
+    ]
+    assert sorted(
+        (r["filename"], r["status"], r["reason"], r["rows_loaded"], r["batch_id"])
+        for r in ledger.collect()
+    ) == [("B.csv", "ok", "", 3, "b1"), ("d.CSV", "error", "0 rows", 0, "b1")]
+    assert ledger.where("processed_ts IS NULL").count() == 0
+
+
 # ---- SFTPSource via injected fake paramiko ----------------------------------
 
 def _fake_paramiko(remote_root):

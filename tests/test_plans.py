@@ -6,6 +6,8 @@ Plans are inspected pre-AQE (``sparkPlan``) — AQE can only improve on
 these shapes at runtime (coalesce, skew-split, join re-selection).
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -157,14 +159,52 @@ def test_exact_dedup_one_shuffle(spark):
     assert "WindowGroupLimit" in p
 
 
-def test_merge_is_single_join_no_extra_shuffle_of_dw(spark):
+def _depth(line: str) -> int:
+    m = re.search(r"[+:]- ", line)
+    return m.start() if m else -1
+
+
+def exchanges_above(p: str, needle: str) -> list[list[str]]:
+    """For every plan line containing ``needle``: the Exchange nodes
+    (shuffle or broadcast) on its path up to the root."""
+    lines = p.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        if needle not in line:
+            continue
+        d, above = _depth(line), []
+        for prev in reversed(lines[:i]):
+            if _depth(prev) < d:
+                d = _depth(prev)
+                if "Exchange" in prev:
+                    above.append(prev.strip(" :+-"))
+        out.append(above)
+    return out
+
+
+# u1's two DW scans: the full row and the key column alone
+_DW_FULL = "ReadSchema: struct<o_orderkey:bigint,o_orderstatus"
+_DW_KEY = "ReadSchema: struct<o_orderkey:bigint>"
+
+
+def _broadcast(p: str, needle: str) -> str:
+    return next(a for a in exchanges_above(p, needle)[0] if "Broadcast" in a)
+
+
+def test_merge_broadcasts_delta_and_never_shuffles_dw(spark):
     df = q.QUERIES["u1_upsert_newer_wins"](spark, SF)
     p = plan(df)
-    # full-outer equi-join: one join node, both sides shuffled on the
-    # key once (2 exchanges), no nested loops
-    assert "FullOuter" in p and ("SortMergeJoin" in p or "ShuffledHashJoin" in p)
-    assert "CartesianProduct" not in p
-    assert n_exchanges(p) <= 2
+    # the delta broadcasts into a left-outer join that streams the DW;
+    # new keys come from a left-anti join against the DW's key column
+    assert "BroadcastHashJoin" in p
+    assert "LeftOuter, BuildRight" in p and "LeftAnti, BuildRight" in p
+    assert "FullOuter" not in p and "CartesianProduct" not in p
+    assert n_exchanges(p) == 0
+    # the full-width DW scan (the only one reading o_orderstatus) feeds
+    # the join with no Exchange of any kind above it; only the DW's key
+    # column broadcasts, into the anti join
+    assert [len(a) for a in exchanges_above(p, _DW_FULL)] == [0], p
+    assert exchanges_above(p, _DW_KEY) == [[_broadcast(p, _DW_KEY)]], p
 
 
 def test_cleaning_projection_stays_codegen(spark):
@@ -191,12 +231,13 @@ def test_cleaning_projection_stays_codegen(spark):
 
 
 def test_bucketed_dw_merge_exchange_free(spark, tmp_path):
-    """The 100 TB merge regime (u1_upsert_bucketed): with the DW side
-    as a k-bucketed catalog table, the full-outer merge join plans
-    exactly ONE exchange — the incoming delta repartitioning to the
-    bucket layout. The warehouse side reads HashPartitioning(k) off
-    its scan. Contrast: the same merge over a plain parquet DW
-    exchanges BOTH sides."""
+    """The 100 TB merge regime (u1_upsert_bucketed), where neither side
+    broadcasts: with the DW as a k-bucketed catalog table, both merge
+    joins read HashPartitioning(k) off the DW scans, so only the delta
+    shuffles — once per join, two exchanges of the same batch (AQE
+    reuses the second at runtime). Contrast: over a plain parquet DW
+    the left-outer join also shuffles the full-width DW and the anti
+    join the DW's key column, four exchanges in all."""
     from sftp_data_ingestion_spark.operators.bucketed import write_bucketed
     from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
     from sftp_data_ingestion_spark.queries.q_pipeline import _u1_inputs
@@ -215,19 +256,76 @@ def test_bucketed_dw_merge_exchange_free(spark, tmp_path):
             newer_wins_cols=("ocr", "status"), greatest_cols=("ins",),
         )
         p = merged._jdf.queryExecution().executedPlan().toString()
-        assert p.count("Exchange hashpartitioning(k") == 1, p
-        assert "Bucketed: true" in p
-        assert "FullOuter" in p
+        assert p.count("Exchange hashpartitioning(k") == 2, p
+        assert n_exchanges(p) == 2
+        assert "SortMergeJoin" in p and "LeftOuter" in p and "LeftAnti" in p
+        dw_scans = exchanges_above(p, "Bucketed: true")
+        assert len(dw_scans) == 2 and all(not a for a in dw_scans), p
 
         plain = upsert_newer_wins(
             dw, delta, key="k", newer_col="ocr",
             newer_wins_cols=("ocr", "status"), greatest_cols=("ins",),
         )
         pp = plain._jdf.queryExecution().executedPlan().toString()
-        assert pp.count("Exchange hashpartitioning(k") == 2, pp
+        assert pp.count("Exchange hashpartitioning(k") == 4, pp
+        assert n_exchanges(pp) == 4
+        # one shuffle of the full-width DW, one of its key column
+        assert [len(a) for a in exchanges_above(pp, _DW_FULL)] == [1], pp
+        assert [len(a) for a in exchanges_above(pp, _DW_KEY)] == [1], pp
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS u1_dw_bucketed_test")
+
+
+def test_cmd_upsert_shuffles_only_the_dedup_window(spark, tmp_path, monkeypatch):
+    """The cron upsert's DW rewrite: the batch-sized delta is the one
+    thing that shuffles (the dedup window on chave_nfe). It is
+    persisted, so the cached plan under both merge joins is one plan,
+    and the full-width DW scan streams into the broadcast left-outer
+    join."""
+    from types import SimpleNamespace
+
+    from sftp_data_ingestion_spark import cli
+    from sftp_data_ingestion_spark.operators import pipeline
+
+    from tests.test_cli import _setup_remote
+
+    real, plans = pipeline.atomic_swap_parquet, []
+
+    def capture(df, path):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, path)
+
+    monkeypatch.setattr(pipeline, "atomic_swap_parquet", capture)
+    wh = str(tmp_path / "wh")
+    args = SimpleNamespace(
+        source=str(_setup_remote(tmp_path)), landing=str(tmp_path / "novos"),
+        warehouse=wh, buckets=None,
+    )
+    cli.cmd_ingest(spark, args)
+    cli.cmd_load(spark, args)
+    cli.cmd_upsert(spark, args)  # first run: DW bootstrapped from the batch
+    assert cli.cmd_upsert(spark, args) == {"dw_rows": 2}  # over a DW on disk
+    p = plans[-1]
+    shuffles = {
+        re.search(r"plan_id=\d+", line).group()
+        for line in p.splitlines()
+        if "Exchange" in line and "broadcast" not in line.lower()
+    }
+    window = {
+        re.search(r"plan_id=\d+", line).group()
+        for line in p.splitlines()
+        if "Exchange hashpartitioning(chave_nfe" in line
+    }
+    assert len(window) == 1 and shuffles == window, p
+    assert "LeftOuter, BuildRight" in p and "LeftAnti, BuildRight" in p
+    assert "InMemoryRelation" in p
+    # the full-width DW scan streams into the join; only the DW's key
+    # column broadcasts, into the anti join
+    full = "ReadSchema: struct<chave_nfe:string,data_nfe:"
+    key = "ReadSchema: struct<chave_nfe:string>"
+    assert [len(a) for a in exchanges_above(p, full)] == [0], p
+    assert exchanges_above(p, key) == [[_broadcast(p, key)]], p
 
 
 def test_cleaning_extractions_single_eval(spark):

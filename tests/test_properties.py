@@ -900,3 +900,72 @@ def test_winnow_density_and_guarantee(spark):
         fps[r["i"]] = {p["fp"] for p in r["o"]}
     assert fps[1] & fps[2]  # detection floor on the shared run
     assert len(fps[0]) <= 2 * (len(a) - 5 + 1) / (4 + 1) + 2  # density
+
+
+# ---------------------------------------------------------------------------
+# landing CSV parse: the quote-free fast path vs the quote-aware path
+# ---------------------------------------------------------------------------
+
+
+def model_parse_line(line: str, sep: str, n: int) -> list[str] | None:
+    """The reference's per-row path (02:146-156): csv.reader cells,
+    blank-row drop, overflow folded into the last cell, short rows
+    padded with ""."""
+    import csv
+
+    cells = next(
+        csv.reader([line], delimiter=sep, quotechar='"', doublequote=True,
+                   escapechar="\\", strict=False),
+        [],
+    )
+    if not any(c.strip() for c in cells):
+        return None
+    if len(cells) > n:
+        return cells[: n - 1] + [sep.join(cells[n - 1:])]
+    return cells + [""] * (n - len(cells))
+
+
+# no quote, backslash or non-space whitespace: quote-free lines whose
+# cells csv.reader and Spark's trim both see the same way
+_plain_cell = st.text(alphabet=" ab1çÉ", max_size=4)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    sep=st.sampled_from([",", ";", "|", "\t"]),
+    n=st.integers(2, 6),
+    rows=st.lists(st.lists(_plain_cell, max_size=9), max_size=25),
+    bom=st.booleans(),
+)
+def test_plain_split_matches_quote_aware_and_csv_reader(spark, sep, n, rows, bom):
+    from sftp_data_ingestion_spark.io.csv_robust import (
+        _quote_aware_split,
+        _unquote_repair,
+        parse_lines,
+    )
+
+    header = [f"h{i}" for i in range(n)]
+    header_line = sep.join(header)
+    body = [sep.join(r) for r in rows] + [
+        sep * 3,  # separator-only
+        "   ",  # space-only
+        "a" + sep + "b" + sep,  # trailing separator
+        sep.join(["x"] * (n + 2)),  # ragged long
+        "y",  # ragged short
+    ]
+    lines = [("\ufeff" if bom else "") + header_line] + body
+    df = spark.createDataFrame([(ln,) for ln in lines], "value string")
+
+    want = [c for c in (model_parse_line(ln, sep, n) for ln in body) if c]
+    fast = [list(r) for r in parse_lines(df, sep, header, header_line).collect()]
+    assert fast == want
+
+    # the quote-aware path (blank test, split, unquote, repair) over
+    # the same lines, as every line took it before the fast path
+    split = _quote_aware_split(sep)
+    slow = (
+        df.where(F.exists(split, lambda c: F.trim(c) != ""))
+        .where(~F.col("value").isin(header_line, "\ufeff" + header_line))
+        .select(_unquote_repair(split, sep, n).alias("c"))
+    )
+    assert [r["c"] + [""] * (n - len(r["c"])) for r in slow.collect()] == want

@@ -749,3 +749,12 @@ def test_round_half_up_vec_matches_scalar():
     got = sim._round_half_up_vec(bulk, 6)
     want = np.array([sim._round_half_up(float(v), 6) for v in bulk])
     assert np.array_equal(got, want)
+
+
+def test_ivf_topk_empty_centroids_raises_named_error(spark, emb):
+    """No cells to probe is bad input: a named ValueError, not the
+    IndexError ``centroids[0]`` used to raise while inferring ``dim``."""
+    q = emb.where(F.col("vec_id") < 5)
+    for dim in (None, 8):
+        with pytest.raises(ValueError, match="centroids is empty"):
+            sim.ivf_topk(q, emb, [], k=3, dim=dim)
