@@ -14,9 +14,11 @@ import os
 import re
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.probe import UNAVAILABLE, Spans, group_metrics
 from sftp_data_ingestion_spark import queries as q
 from sftp_data_ingestion_spark.session import get_spark
 
@@ -89,62 +91,51 @@ def _calibrate(spark) -> float:
     return round(best, 3)
 
 
-def _executor_run_time_ms(spark) -> int | None:
-    """Total executor task time (ms) across all completed stages, via
-    the in-process AppStatusStore. The bench runs queries serially, so
-    the DELTA across one query is that query's sum-of-task-time — the
-    number that separates "honors cores but overhead-bound at this SF"
-    (task time >> wall means real parallel work; task time ~ wall on
-    32 cores means fixed per-job cost dominates) from "ignores cores"
-    (r13 VERDICT #6: the driver's low-core run flagged
-    suspect_cpus_ignored because wall alone cannot tell the two
-    apart). Returns None when the Java internals are unreachable —
-    diagnostics must never wedge the bench."""
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        empty = sc._jvm.java.util.Collections.emptyList()
-        # full Java signature (statuses, details, withSummaries,
-        # unsortedQuantiles, taskStatus) — py4j cannot fill Scala
-        # default args, and a None for double[] NPEs in ArrayOps
-        stages = store.stageList(
-            empty, False, False, sc._gateway.new_array(sc._jvm.double, 0),
-            empty,
-        )
-        total = 0
-        for i in range(stages.size()):
-            total += stages.apply(i).executorRunTime()
-        return int(total)
-    except Exception:
-        return None
-
-
 def _time_pass(
     spark, sf_dir: str, task_ms: dict[str, float] | None = None
 ) -> dict[str, float]:
-    """One timed end-to-end pass over the headline set. When
-    ``task_ms`` is given, also records each query's sum-of-task-time
-    delta (ms) there."""
+    """One timed end-to-end pass over the headline set, each query under
+    its own job group. When ``task_ms`` is given, also records each
+    query's sum of executor task time (ms) there, read from the status
+    store by ``perfbench/probe.py``'s ``group_metrics``: task time >>
+    wall on N cores means real parallel work, task time ~ wall means
+    fixed per-job cost dominates (r13 VERDICT #6: wall alone cannot
+    tell that apart from "ignores cores"). The read runs after each
+    query's span, outside the timed region."""
+    sc = spark.sparkContext
+    spans = Spans(sc)
+    tag = uuid.uuid4().hex[:8]  # job groups stay unique across passes
     out: dict[str, float] = {}
     for name in HEADLINE:
-        spark.sparkContext.setJobDescription(f"bench: {name}")
-        pre = _executor_run_time_ms(spark) if task_ms is not None else None
-        t0 = time.time()
-        q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        out[name] = time.time() - t0
-        if task_ms is not None and pre is not None:
-            post = _executor_run_time_ms(spark)
-            if post is not None:
-                task_ms[name] = post - pre
-        spark.sparkContext.setJobDescription(None)
+        group = f"bench {tag}: {name}"
+        with spans.span(f"bench: {name}", group=group) as rec:
+            q.QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        out[name] = spans.wall(rec)
+        if task_ms is not None:
+            groups = group_metrics(sc)
+            if groups != UNAVAILABLE and group in groups:
+                task_ms[name] = groups[group]["task_s"] * 1000.0
     return out
+
+
+def _prev_round_commit_in(log_lines: list[str]) -> str | None:
+    """The most recent 'round N: ' commit in ``git log`` lines of the
+    form ``<hash>\t<subject>`` (newest first), skipping the first line
+    (HEAD): when HEAD is itself a round snapshot, the previous round is
+    the one before it."""
+    for line in log_lines[1:]:
+        h, _, msg = line.partition("\t")
+        if re.match(r"round \d+: ", msg):
+            return h
+    return None
 
 
 def _prev_round_commit() -> str | None:
     """The previous round's final tree = the most recent driver
-    artifact commit ('round N: verdict/advice/correctness/bench')."""
+    artifact commit ('round N: verdict/advice/correctness/bench')
+    before HEAD."""
     import subprocess
 
     try:
@@ -155,11 +146,7 @@ def _prev_round_commit() -> str | None:
         )
     except Exception:
         return None
-    for line in out.stdout.splitlines():
-        h, _, msg = line.partition("\t")
-        if re.match(r"round \d+: ", msg):
-            return h
-    return None
+    return _prev_round_commit_in(out.stdout.splitlines())
 
 
 def _parity_vs_prev(sf_dir: str, n_rounds: int = 3) -> dict:

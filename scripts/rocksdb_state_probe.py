@@ -19,8 +19,8 @@ term; this probe MEASURES that slope on the disk-backed store (state
 bytes per admitted doc should be ~constant: bands x 8B x num_hashes
 plus bucket overhead).
 
-Run: python scripts/rocksdb_state_probe.py
-     SPARK_GRAFT_PROBE_DOCS=5000 to change the larger scale.
+Run: python scripts/rocksdb_state_probe.py [DOCS]
+     (DOCS is the larger scale, default 5000).
 """
 
 from __future__ import annotations
@@ -41,7 +41,6 @@ from sftp_data_ingestion_spark import streaming as st
 from sftp_data_ingestion_spark.session import get_spark
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-BIG = int(os.environ.get("SPARK_GRAFT_PROBE_DOCS", "5000"))
 
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = (
@@ -127,10 +126,11 @@ def drain(spark, n_docs: int) -> dict:
 
 
 def main() -> None:
+    n_big = int(sys.argv[1]) if len(sys.argv) > 1 else 5000
     spark = get_spark(app_name="rocksdb-state-probe")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    small = drain(spark, max(BIG // 10, 100))
-    big = drain(spark, BIG)
+    small = drain(spark, max(n_big // 10, 100))
+    big = drain(spark, n_big)
     ratio_rows = (
         big["state_rows"] / small["state_rows"] if small["state_rows"] else None
     )

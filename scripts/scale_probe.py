@@ -106,8 +106,8 @@ PROBES = [
     # shuffle (shard window), Gopher battery (array-HOF projection).
     # v_semdedup is NOT probed as-registered: its fixture operating
     # point (k=8) is only honest at fixture scale — the 100 TB regime
-    # scales k with the corpus; scripts/semdedup_probe.py measures
-    # that regime directly.
+    # scales k with the corpus (PERFORMANCE.md, "SemDeDup regime
+    # probe", records that regime).
     "x_dsir_importance",
     "x_epoch_shuffle",
     "t_gopher_rules",
@@ -121,8 +121,8 @@ PROBES = [
     # operators. v_semdedup_auto_k is NOT probed as-registered for the
     # same reason as v_semdedup: at 100x its auto-k derives k~19k and
     # the driver-side group-Lloyd becomes the artifact being measured;
-    # semdedup_probe.py owns the k-proportional regime, and
-    # kmeans_assign_probe.py owns the assignment-engine crossover.
+    # the k-proportional regime and the assignment-engine crossover
+    # are recorded in PERFORMANCE.md (r11 and r13 tables).
     "t_c4_filters",               # array-HOF line battery (documents)
     "t_ccnet_perplexity_buckets", # unigram LM join + ntile (documents)
     "x_temperature_source_mix",   # per-source power weights + quota

@@ -751,39 +751,35 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    materialize_candidates: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: MinHash -> LSH buckets -> exact-Jaccard
     verification. 100 TB path: every stage is a bucketed shuffle.
 
-    With ``materialize_candidates`` (default) the candidate pairs are
-    ``localCheckpoint``-ed and the corpus is semi-join-prefiltered to
-    candidate ids before the verify stage, so re-shingling covers only
-    candidates instead of the whole corpus twice — candidates are a
-    small fraction of the corpus at every scale, and because the pairs
-    are materialized, deriving the id set cannot re-execute the LSH
-    subtree (the trap the docstring of :func:`jaccard_verify`
-    describes; measured 2.6s -> 1.7s at sf0.1). Cost: the operator
-    becomes eager, and the checkpoint lives on executor-local storage
-    — pass ``False`` to stay fully lazy, or persist the pairs to
-    reliable storage yourself in a long multi-stage job."""
+    The candidate pairs are ``localCheckpoint``-ed and the corpus is
+    semi-join-prefiltered to candidate ids before the verify stage, so
+    re-shingling covers only candidates instead of the whole corpus
+    twice — candidates are a small fraction of the corpus at every
+    scale, and because the pairs are materialized, deriving the id set
+    cannot re-execute the LSH subtree (the trap the docstring of
+    :func:`jaccard_verify` describes; measured 2.6s -> 1.7s at sf0.1).
+    Cost: the operator is eager, and the checkpoint lives on
+    executor-local storage."""
     signed = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     cands = lsh_candidate_pairs(signed, id_col, num_hashes, bands)
-    if materialize_candidates:
-        cands = cands.localCheckpoint(eager=True)
-        ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .unionAll(cands.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        # broadcast the candidate-id set: the checkpointed pairs are an
-        # RDD leaf with no size stats, so the planner falls back to a
-        # sort-merge semi-join that shuffles the whole corpus by id.
-        # Candidate ids are the near-dup working set (<= 2x|pairs|,
-        # orders smaller than the corpus); a broadcast semi-join keeps
-        # the corpus scan shuffle-free. A 100 TB run whose candidate
-        # set outgrows broadcast swaps this for a Bloom prefilter.
-        df = df.join(F.broadcast(ids), id_col, "left_semi")
+    cands = cands.localCheckpoint(eager=True)
+    ids = (
+        cands.select(F.col("id_a").alias(id_col))
+        .unionAll(cands.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    # broadcast the candidate-id set: the checkpointed pairs are an
+    # RDD leaf with no size stats, so the planner falls back to a
+    # sort-merge semi-join that shuffles the whole corpus by id.
+    # Candidate ids are the near-dup working set (<= 2x|pairs|,
+    # orders smaller than the corpus); a broadcast semi-join keeps
+    # the corpus scan shuffle-free. A 100 TB run whose candidate
+    # set outgrows broadcast swaps this for a Bloom prefilter.
+    df = df.join(F.broadcast(ids), id_col, "left_semi")
     return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
 
 

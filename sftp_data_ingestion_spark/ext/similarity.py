@@ -947,9 +947,9 @@ def ivf_topk(
     ``corpus_engine='arrow'`` runs the corpus-side cell assignment on
     :func:`kmeans_assign_arrow` (broadcast numpy centroid matrix, one
     BLAS matmul per Arrow batch) instead of the k x dim
-    literal-expression plan — the engine the r13 crossover probe
-    (scripts/kmeans_assign_probe.py) showed is flat in k while the
-    expr plan's compose/codegen cost grows linearly in k (measured
+    literal-expression plan — the engine PERFORMANCE.md's r13 table
+    "Arrow-vs-expression assignment crossover" shows is flat in k while
+    the expr plan's compose/codegen cost grows linearly in k (measured
     1.25 s/run for the expr corpus assign at sf0.1, k=16). The two
     engines can DISAGREE on a vector's cell whenever its top two cell
     scores are within ~1e-6 of each other — not just at ulp-level
@@ -1903,9 +1903,9 @@ def coarse_assignments(
 # large-k centroid assignment: Arrow/numpy engines
 # ---------------------------------------------------------------------------
 
-# measured flat-expr vs arrow crossover (scripts/kmeans_assign_probe.py):
-# below this k the literal-expression argmax wins (no Python worker
-# round-trip); above it the k x dim literal tree starts costing more in
+# measured flat-expr vs arrow crossover (PERFORMANCE.md, "Arrow-vs-
+# expression assignment crossover"): below this k the literal-expression
+# argmax wins (no Python worker round-trip); above it the k x dim literal tree starts costing more in
 # plan/codegen than the Arrow batch transfer — and at the k ~ n regime
 # SemDeDup prescribes for 100 TB (k = 10^4..10^6) the literal plan is
 # not merely slow but a driver-side plan-size blow-up, which the numpy

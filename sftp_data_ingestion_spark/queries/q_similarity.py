@@ -127,8 +127,8 @@ def v_ivf_ann_topk(spark, sf_dir):
     literal-expression plan was the query's single largest cost
     (1.25 s/run of plan compose + interpreted HOF eval at sf0.1,
     k=16, vs ~0.3 s for the broadcast-matmul kernel — the same
-    crossover scripts/kmeans_assign_probe.py measured). The
-    recall-graded sibling (nprobe < n_cells, where assignment IS part
+    crossover as PERFORMANCE.md's "Arrow-vs-expression assignment
+    crossover" table). The recall-graded sibling (nprobe < n_cells, where assignment IS part
     of the graded statement) keeps the expr engine."""
     e = table(spark, sf_dir, "embeddings")
     cents = sim.train_centroids_sample(e, k=16)

@@ -92,7 +92,7 @@ def curation_pipeline(spark, sf_dir):
     ).where(F.col("quality") >= 0.6)
     # shared bucketed signature layout, restricted to the gated set
     # (per-doc banding makes the restriction exact — see
-    # _curation_stages); pairs were verified at threshold 0.5
+    # curation_e2e); pairs were verified at threshold 0.5
     pairs_kept = (
         _bucketed_neardup_pairs_t05(spark, sf_dir)
         .join(kept.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi")
@@ -253,21 +253,8 @@ def curation_e2e(spark, sf_dir):
     decontamination probe) sees only survivors; the eval shingle set
     broadcasts; budget + packing are one window each per source
     shard. Nothing here is new machinery — that is the point.
-    Stage-decomposed for profiling by :func:`_curation_stages`
-    (scripts/curation_decompose.py times the cumulative stages —
-    r12 VERDICT #2)."""
-    return _curation_stages(spark, sf_dir)["s4_pack"]
-
-
-def _curation_stages(spark, sf_dir, upto=None):
-    """The curation_e2e pipeline as CUMULATIVE stage frames
-    (s0_gate .. s4_pack, each extending the previous), shared by the
-    graded query (final stage) and the stage-timing probe. Building
-    past s0 is EAGER at the survivor checkpoint (s1), exactly like
-    the composed query always was. ``upto`` stops construction at the
-    named stage — without it the s0 probe reading would silently pay
-    the s1 checkpoint build (the first decompose run had exactly that
-    contamination: s0 read HIGHER than s1)."""
+    Composing is EAGER at the survivor checkpoint; the r12 per-stage
+    costs are in PERFORMANCE.md, "curation_e2e, decomposed and cut"."""
     d = table(spark, sf_dir, "documents")
     t = F.col("text")
     evalset = d.where(F.col("doc_id") % 25 == 0)
@@ -284,8 +271,6 @@ def _curation_stages(spark, sf_dir, upto=None):
     # checkpoint below — a production pipeline stages the gated corpus
     # before LSH anyway.
     kept = kept.localCheckpoint(eager=False)
-    if upto == "s0_gate":
-        return {"s0_gate": kept}
     # near-dup pairs come off the SHARED bucketed signature layout
     # (organize once per sweep, zero band exchanges), restricted to
     # the gated set — banding is per-document, so full-table candidate
@@ -323,16 +308,12 @@ def _curation_stages(spark, sf_dir, upto=None):
         )
         .localCheckpoint()
     )
-    if upto == "s1_neardup":
-        return {"s1_neardup": surv}
     contaminated = (
         dd.contamination_report(surv, evalset)
         .where(F.col("contamination") >= 0.2)
         .select("doc_id")
     )
     clean = surv.join(contaminated, "doc_id", "left_anti")
-    if upto == "s2_decontaminate":
-        return {"s2_decontaminate": clean}
 
     from pyspark.sql import Window
 
@@ -355,20 +336,11 @@ def _curation_stages(spark, sf_dir, upto=None):
         .where(F.col("running") <= F.col("token_budget"))
         .select("source", "doc_id", "text")
     )
-    if upto == "s3_budget":
-        return {"s3_budget": picked}
     packed = ts.pack_sequences(picked, budget=256, by="source")
-    final = packed.groupBy("source", "pack_id").agg(
+    return packed.groupBy("source", "pack_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
     )
-    return {
-        "s0_gate": kept,
-        "s1_neardup": surv,
-        "s2_decontaminate": clean,
-        "s3_budget": picked,
-        "s4_pack": final,
-    }
 
 
 # ---------------------------------------------------------------------------

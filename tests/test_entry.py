@@ -174,9 +174,10 @@ def test_regrade_first_pins_to_front():
         _proof_priority_order,
     )
 
-    present = [n for n in REGRADE_FIRST if n in QUERIES]
-    assert list(QUERIES)[: len(present)] == present
-    assert len(present) <= 50  # must all fit in the grading window
+    # a misspelled name would otherwise be dropped from the pin silently
+    assert [n for n in REGRADE_FIRST if n not in QUERIES] == []
+    assert list(QUERIES)[: len(REGRADE_FIRST)] == list(REGRADE_FIRST)
+    assert len(REGRADE_FIRST) <= 50  # must all fit in the grading window
 
     # pure-ordering contract: pinned beats unproven beats proven
     nm = ["new_query", "pinned_q", "old_green"]
