@@ -503,6 +503,20 @@ def test_cosine_bruteforce_broadcasts_query_side(spark):
     assert "BroadcastNestedLoopJoin BuildLeft" in p
 
 
+def test_cosine_bruteforce_arrow_kernel_no_corpus_shuffle(spark):
+    """The graded brute-force query runs the Arrow/BLAS kernel (r13
+    VERDICT #7): the corpus flows scan -> MapInPandas with NO join node
+    and no corpus exchange; the only shuffle is the k·Q-row candidate
+    reduction into the final top-k window. Values are pinned identical
+    to the expression engine by test_similarity.py."""
+    df = q.QUERIES["v_cosine_topk_bruteforce"](spark, SF)
+    p = plan(df)
+    assert "MapInPandas" in p
+    assert "Join" not in p  # kernel scores pairs; no join node at all
+    # the window exchange above the kernel, nothing below it
+    assert p.count("Exchange") == 1, p[:3000]
+
+
 def test_keyless_asof_range_partitions_time_axis(spark):
     """A keyless (global) as-of must NOT funnel the union through one
     sort partition: the plan range-partitions on the time axis and the
