@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.rebalance import cut
+
 
 def _symbols(seq):
     return F.filter(F.split(seq, r"\|\|"), lambda x: x != "")
@@ -130,7 +132,7 @@ def train_bpe_merges(
         # counts must both see ONE materialized answer (re-execution
         # could re-derive it nondeterministically under equal counts
         # on different plans)
-        best = best.localCheckpoint()
+        best = cut(best)
         results.append(best)
         vocab = vocab.crossJoin(
             F.broadcast(best.select(F.col("left").alias("__l"),

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.rebalance import cut, fan_out
+
 
 def normalized(text: Column) -> Column:
     """Dedup normalization: lowercase, collapse whitespace, trim."""
@@ -231,8 +233,6 @@ def exact_substr_dup_spans(
     join (on id) + exact window (on window text), islands (on id) —
     all keyed, none corpus x corpus."""
     import numpy as np
-
-    from sftp_data_ingestion_spark.rebalance import fan_out
 
     toks_col = F.split(normalized(F.col(text_col)), " ")
     src = df.select(F.col(id_col).alias("id"), toks_col.alias("toks"))
@@ -493,17 +493,6 @@ def minhash_signature(sh: Column, num_hashes: int = 64) -> Column:
     )
 
 
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    return df.withColumn(
-        "minhash", minhash_signature(shingles(F.col(text_col), shingle_n), num_hashes)
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -528,8 +517,6 @@ def minhash_signatures(
     few-split scan would otherwise explode and hash every shingle on
     one core, and hash-partitioning by id lets the signature groupBy
     reuse the same exchange."""
-    from sftp_data_ingestion_spark.rebalance import fan_out
-
     df = fan_out(df, id_col)
     perms = _mh_coeffs(num_hashes)
     exploded = df.select(
@@ -617,9 +604,10 @@ def lsh_candidate_pairs(
     """LSH banding: split each signature into ``bands`` rows keyed by
     ``(band_idx, hash(band slice))``, self-join per bucket -> candidate
     pairs (a < b). Shuffle key is the band hash — uniform; bucket-local
-    join cost only. Requires a ``minhash`` column (see with_minhash).
+    join cost only. Requires a ``minhash`` column (see
+    :func:`minhash_signatures`).
 
-    The banded frame is cut with a LAZY ``localCheckpoint`` before the
+    The banded frame is cut with a LAZY :func:`cut` before the
     self-join (r14, guide §2.4/§3.3): when AQE broadcasts one side of
     the bucket join — the whole fixture-scale regime — there is no
     shuffle exchange for ReuseExchange to dedup, so BOTH join sides
@@ -634,7 +622,7 @@ def lsh_candidate_pairs(
     (:func:`lsh_candidate_pairs_from_banded` over a catalog scan)
     needs no cut — its scan is already materialized storage."""
     return lsh_candidate_pairs_from_banded(
-        _banded(df, id_col, num_hashes, bands).localCheckpoint(eager=False)
+        cut(_banded(df, id_col, num_hashes, bands), eager=False)
     )
 
 
@@ -665,8 +653,7 @@ def banded_bucketed_signatures(
     postings table (`queries/q_training.term_bucketed_postings`): one
     organize-time shuffle at signature-build, then every later band
     join is exchange-free. ``sig`` is a signature frame from
-    :func:`minhash_signatures` / :func:`with_minhash` (columns
-    ``id_col, minhash``)."""
+    :func:`minhash_signatures` (columns ``id_col, minhash``)."""
     from sftp_data_ingestion_spark.operators.bucketed import write_bucketed
 
     write_bucketed(
@@ -703,8 +690,8 @@ def jaccard_verify(
     common subexpression across the broadcast and join sides without
     materialization) — measured 2.7s -> 4.7s at sf0.1. Re-shingling
     the corpus once more is the cheaper side of that trade at every
-    scale; pipelines that already persist the candidate pairs can
-    pass a materialized ``pairs`` and add the prefilter themselves."""
+    scale; pipelines that cut the candidate pairs get the prefilter
+    from :func:`verify_candidates`."""
     sh = df.select(
         F.col(id_col).alias("id"),
         shingles(F.col(text_col), shingle_n).alias("sh"),
@@ -743,6 +730,38 @@ def jaccard_verify(
     return out.where(F.col("jaccard") >= threshold).drop("__nd")
 
 
+def verify_candidates(
+    cands: DataFrame,
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_n: int = 3,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """Exact-Jaccard verify of cut candidate pairs ``(id_a, id_b)``,
+    with the corpus semi-join-prefiltered to the candidate ids first,
+    so re-shingling covers only candidates instead of the whole corpus
+    twice. ``cands`` must already be cut (:func:`rebalance.cut`):
+    deriving the id set from an uncut pair plan re-executes the LSH
+    subtree (the trap the docstring of :func:`jaccard_verify`
+    describes)."""
+    ids = (
+        cands.select(F.col("id_a").alias(id_col))
+        .unionAll(cands.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    # broadcast the candidate-id set: a cut frame's size estimate is
+    # its origin plan's, and the band self-join's is wildly high
+    # (sf0.1, 477 ids: 727 GiB estimated on the bucketed path, 17.9 GiB
+    # inline), so without the hint the planner picks a sort-merge
+    # semi-join that shuffles the whole corpus by id. Candidate ids are
+    # the near-dup working set (<= 2x|pairs|, orders smaller than the
+    # corpus). There is no size guard: an id set past the broadcast
+    # limit fails the job.
+    df = df.join(F.broadcast(ids), id_col, "left_semi")
+    return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -755,88 +774,12 @@ def minhash_near_dup_pairs(
     """Full near-dup pipeline: MinHash -> LSH buckets -> exact-Jaccard
     verification. 100 TB path: every stage is a bucketed shuffle.
 
-    The candidate pairs are ``localCheckpoint``-ed and the corpus is
-    semi-join-prefiltered to candidate ids before the verify stage, so
-    re-shingling covers only candidates instead of the whole corpus
-    twice — candidates are a small fraction of the corpus at every
-    scale, and because the pairs are materialized, deriving the id set
-    cannot re-execute the LSH subtree (the trap the docstring of
-    :func:`jaccard_verify` describes; measured 2.6s -> 1.7s at sf0.1).
-    Cost: the operator is eager, and the checkpoint lives on
-    executor-local storage."""
+    The candidate pairs are cut eagerly and verified by
+    :func:`verify_candidates` (measured 2.6s -> 1.7s at sf0.1 against
+    verifying over the whole corpus). Cost: the operator is eager."""
     signed = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    cands = lsh_candidate_pairs(signed, id_col, num_hashes, bands)
-    cands = cands.localCheckpoint(eager=True)
-    ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionAll(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # broadcast the candidate-id set: the checkpointed pairs are an
-    # RDD leaf with no size stats, so the planner falls back to a
-    # sort-merge semi-join that shuffles the whole corpus by id.
-    # Candidate ids are the near-dup working set (<= 2x|pairs|,
-    # orders smaller than the corpus); a broadcast semi-join keeps
-    # the corpus scan shuffle-free. A 100 TB run whose candidate
-    # set outgrows broadcast swaps this for a Bloom prefilter.
-    df = df.join(F.broadcast(ids), id_col, "left_semi")
-    return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
-
-
-def minhash_near_dup_pairs_bucketed(
-    spark,
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    num_buckets: int = 32,
-) -> DataFrame:
-    """The 100 TB REGIME of :func:`minhash_near_dup_pairs`, end to
-    end: signatures are banded and materialized ONCE into the
-    ``(band_hash, band_idx)``-bucketed external table
-    (:func:`banded_bucketed_signatures` — one organize-time shuffle),
-    and the candidate self-join reads HashPartitioning off that scan
-    with ZERO band exchanges (plan-pinned in
-    tests/test_dedup_clusters.py::test_lsh_bucketed_band_join_exchange_free).
-    The verify stage is unchanged: the bucketed table IS the
-    candidate materialization (no localCheckpoint needed), the corpus
-    is semi-join-prefiltered to candidate ids, and exact Jaccard runs
-    on candidates only.
-
-    The layout is a physical lever only — output must be row-identical
-    to the derive-inline pipeline (same banding, same verify), which
-    is exactly what the graded registry twin
-    (`queries/q_text.d_minhash_lsh_near_dup_bucketed`) pins against
-    the all-pairs DuckDB oracle."""
-    signed = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    banded = banded_bucketed_signatures(
-        spark, signed, table_name, path,
-        id_col=id_col, num_hashes=num_hashes, bands=bands,
-        num_buckets=num_buckets,
-    )
-    # lazy cut: the bucketed table spares the signature recompute, but
-    # the band self-join + distinct feeds five plan references (pair
-    # input, the two union branches of the id derivation, and each
-    # verify side's semi-join); share one RDD instead of expanding the
-    # join five times (same reasoning as lsh_candidate_pairs)
-    cands = lsh_candidate_pairs_from_banded(banded).localCheckpoint(
-        eager=False
-    )
-    ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionAll(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # broadcast semi-join for the same reason as the inline path: the
-    # RDD-backed cands carry no size stats and the planner would
-    # otherwise shuffle the corpus through a sort-merge semi-join
-    df = df.join(F.broadcast(ids), id_col, "left_semi")
-    return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
+    cands = cut(lsh_candidate_pairs(signed, id_col, num_hashes, bands))
+    return verify_candidates(cands, df, id_col, text_col, shingle_n, threshold)
 
 
 def incremental_near_dup_pairs(
@@ -943,8 +886,6 @@ def contamination_report(
     # projection duplicates the zip_with lambdas past the codegen
     # budget and drops the stage to the interpreted path (measured
     # 18x: 2.7 s -> 48 s on the sf0.1 documents fixture).
-    from sftp_data_ingestion_spark.rebalance import fan_out
-
     sh_arr = shingles(F.col(text_col), shingle_n)
     co = (
         fan_out(corpus, id_col)
@@ -1132,7 +1073,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "id",
     max_iters: int = 20,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components by min-label propagation: every vertex
     starts labeled with its own id; each iteration every vertex takes
@@ -1148,33 +1088,16 @@ def connected_components(
     edges-to-labels equi-join unioned with the previous labels into
     ONE min-aggregate (the old separate labels-to-neighbor-min join
     is folded into the aggregate — one fewer shuffle per iteration),
-    ending in a LAZY ``localCheckpoint`` whose materialization is the
+    ending in a LAZY :func:`cut` whose materialization is the
     convergence count itself (one action per superstep, not two;
-    without the checkpoint the iterated join lineage grows
+    without the cut the iterated join lineage grows
     exponentially and planning time dominates — the standard Spark
     iterative-algorithm pattern). Iteration count is the graph
     diameter, and near-dup graphs are dense little cliques
-    (diameter 2-3), not long chains.
-
-    ``reliable_checkpoint=True`` cuts lineage with ``checkpoint()``
-    to the session's checkpoint dir (``sc.setCheckpointDir`` on a
-    replicated store) instead of ``localCheckpoint()``. Local
-    checkpoints live on executor-local storage: on executor loss the
-    superstep state is GONE and the whole iteration restarts from the
-    LSH pipeline — acceptable single-host tradeoff, not acceptable on
-    a preemptible 100 TB cluster, which should pass True (r13 VERDICT
-    #10). Default False: local mode has no reliable store and the
-    extra write-to-dir round-trip per superstep is pure cost there.
-
-    Fault-tolerance caveat on the SETUP cut (sym): with lazy
-    checkpoints Spark only materializes the FIRST checkpoint the
-    action reaches (``spark.checkpoint.checkpointAllMarkedAncestors``
-    defaults to false), so ``sym`` is effectively a persist-level
-    cache (MEMORY_AND_DISK), not a checkpoint — it recomputes from the
-    full upstream pipeline if its cached blocks are lost (r13 ADVICE).
-    "Computed exactly once" therefore holds per-process in local mode
-    and best-effort on a cluster; the per-superstep ``updated`` cut is
-    the one that genuinely truncates lineage each iteration.
+    (diameter 2-3), not long chains. With a checkpoint dir set, the
+    cuts are reliable and eager (see :func:`cut`), so the setup cut
+    on ``sym`` is written once and no superstep recomputes the edge
+    pipeline.
 
     r14: superstep 1 is join-free — iteration-0 labels are the
     identity map, so the first edge handoff is ``sym`` read directly
@@ -1182,16 +1105,8 @@ def connected_components(
     less; value-identical by substitution).
     """
     ids = vertices.select(F.col(id_col).alias("id"))
-
-    def _cut(df: DataFrame) -> DataFrame:
-        """Lineage cut: reliable checkpoint() on a cluster,
-        localCheckpoint() locally. Lazy either way — the convergence
-        count is the materializing action."""
-        if reliable_checkpoint:
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
     # Materialize the edge list ONCE: `edges` is typically the output
-    # of a whole LSH/verify pipeline, and without this checkpoint every
+    # of a whole LSH/verify pipeline, and without this cut every
     # superstep's join re-executes that entire subtree (measured ~50 s
     # for the embedding-near-dup clusters at sf0.01, dropping to ~8 s
     # with it — and the r3 bench's run-to-run instability came from
@@ -1207,7 +1122,7 @@ def connected_components(
         .join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
         .join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
     )
-    sym = _cut(sym)
+    sym = cut(sym, eager=False)
     labels = None
     converged = False
     for _ in range(max_iters):
@@ -1254,9 +1169,9 @@ def connected_components(
             )
             .withColumn("__chg", F.col("component") < F.col("__old"))
         )
-        updated = _cut(updated)
-        # the count materializes the lazy checkpoint — one action per
-        # superstep where eager-checkpoint-then-count paid two
+        updated = cut(updated, eager=False)
+        # the count materializes the lazy cut — one action per
+        # superstep where eager-cut-then-count paid two
         n_changed = updated.where(F.col("__chg")).count()
         labels = updated.select("id", "component")
         if n_changed == 0:
@@ -1297,7 +1212,7 @@ def neardup_clusters(
 
     ``pairs`` (optional, columns ``id_a, id_b``) supplies the verified
     near-dup edges from elsewhere — e.g. the organize-once bucketed
-    signature layout (:func:`minhash_near_dup_pairs_bucketed`), so
+    signature layout (:func:`banded_bucketed_signatures`), so
     repeated cluster consumers skip the eager inline pair derivation
     entirely; by default the pairs derive inline. When ``pairs`` is
     given, ``threshold``/``**minhash_kwargs`` CANNOT apply (the edges
@@ -1378,7 +1293,7 @@ def repeated_ngram_spans(
         # over the whole corpus) executes twice. The rows are narrow
         # (id, pos, 32-byte digest), so materializing beats a second
         # full text scan at any scale.
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
     counts = sh.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
     rep = counts.where(F.col("c") >= min_repeats).select("g")

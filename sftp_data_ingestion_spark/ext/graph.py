@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.rebalance import cut
+
 
 def pagerank(
     edges: DataFrame,
@@ -86,26 +88,24 @@ def pagerank(
                 "deg"
             ),
             F.sum(bad_w.cast("long")).alias("n_bad"),
-        ).localCheckpoint(eager=True)
+        ).transform(cut)
         n_bad = deg.agg(F.sum("n_bad")).first()[0] or 0
         if n_bad:
             raise ValueError(
                 f"pagerank: {n_bad} edge(s) with NULL/NaN/negative weight"
             )
         deg = deg.drop("n_bad")
-        e = e.where(F.col("w") > 0).join(deg, "src").localCheckpoint(
-            eager=True
-        )
+        e = cut(e.where(F.col("w") > 0).join(deg, "src"))
     else:
         # out-strength rides along each edge row so the per-iteration
         # join is edges-to-ranks only (degree never re-joins in-loop).
         deg = e.groupBy("src").agg(F.sum("w").alias("deg"))
-        e = e.join(deg, "src").localCheckpoint(eager=True)
+        e = cut(e.join(deg, "src"))
     nodes = (
         e.select("src").withColumnsRenamed({"src": "node"})
         .unionAll(e.select("dst").withColumnsRenamed({"dst": "node"}))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
     n = nodes.count()  # one scalar to the driver; folds into literals
     if n == 0:
@@ -134,7 +134,7 @@ def pagerank(
                     * F.coalesce(F.col("contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
+            .transform(cut)
         )
     return ranks
 
@@ -217,7 +217,7 @@ def cc_star_contraction(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
 
     def mins(e):
@@ -251,7 +251,7 @@ def cc_star_contraction(
             large.unionAll(large.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(cut)
         )
         m = mins(sym)
         # small-star: (v, m(u)) for v in N(u), v < u, plus (u, m(u))
@@ -265,7 +265,7 @@ def cc_star_contraction(
             small.unionAll(small.select(F.col("v").alias("u"), F.col("u").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(cut)
         )
         fp2 = fingerprint(sym)
         if fp2 == fp:

@@ -26,7 +26,7 @@ import operator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sftp_data_ingestion_spark.rebalance import fan_out
+from sftp_data_ingestion_spark.rebalance import cut, fan_out
 
 
 def as_double(vec: Column) -> Column:
@@ -48,10 +48,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def dot_flat(a: Column, b: Column, dim: int) -> Column:
@@ -90,7 +86,7 @@ def _dim_of(df: DataFrame, vec_col: str, *fallbacks: DataFrame) -> int:
 
 def _pair_sim(qv: Column, cv: Column, qn: Column, cn: Column, dim: int) -> Column:
     """Pair cosine with PRE-computed per-side norms. Bit-identical to
-    :func:`cosine` (same ``dot / (n_a * n_b)`` arithmetic, and a
+    ``dot(a, b) / (norm(a) * norm(b))`` (same arithmetic, and a
     vector's norm is a deterministic fold), but the norms are computed
     once per input row below the join instead of once per PAIR above
     it — 3 dot-products per pair drop to 1 — and the remaining dot is
@@ -313,8 +309,8 @@ def quantize_int8(
     one float scale — a 4x storage/shuffle/scan reduction on the
     corpus side (the first memory lever every vector store pulls
     before product quantization). Pure Column expressions; the max is
-    one interpreted fold per ROW (cheap — see the srp_signature note
-    on where HOFs are acceptable)."""
+    one interpreted fold per ROW, cheap next to per-pair or per-plane
+    folds (see :func:`_srp_bucket_frame`)."""
     v = as_double(F.col(vec_col))
     amax = F.aggregate(
         v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))
@@ -356,9 +352,8 @@ def _plane_component(plane: int, dim_idx: Column, seed: int) -> Column:
 
 # (n_planes, seed, dim) -> list of plane vectors, each a list of floats.
 # Values are produced by evaluating the EXACT _plane_component
-# expressions once on a one-row frame, so the literal-hoisted signature
-# path below is bit-identical to the per-row generation path (a Python
-# float round-trip preserves IEEE754 doubles exactly).
+# expressions once on a one-row frame (a Python float round-trip
+# preserves IEEE754 doubles exactly).
 _PLANE_CACHE: dict[tuple[int, int, int], list[list[float]]] = {}
 
 
@@ -392,8 +387,7 @@ def _plane_literals(n_planes: int, seed: int, dim: int) -> list[list[float]]:
             # index, silently collapsing every plane to the same
             # vector (each table then hashes with one effective plane
             # — ~2 buckets — which round-5 measurement caught as
-            # plane-count-invariant candidate counts). Same trap the
-            # srp_signature comment documents.
+            # plane-count-invariant candidate counts).
             return lambda i: _plane_component(p, i, seed)
 
         row = spark.range(1).select(
@@ -404,47 +398,6 @@ def _plane_literals(n_planes: int, seed: int, dim: int) -> list[list[float]]:
         ).head()
         _PLANE_CACHE[key] = [list(row[f"p{p}"]) for p in range(n_planes)]
     return _PLANE_CACHE[key]
-
-
-def srp_signature(
-    vec: Column, n_planes: int = 16, seed: int = 42
-) -> Column:
-    """Sign pattern of the vector against ``n_planes`` fixed random
-    hyperplanes, packed into one long — the pure-Column reference form
-    (expression-only, works on any engine surface including streaming).
-
-    The batch hot paths (:func:`srp_topk`,
-    :func:`embedding_near_dup_pairs`) use :func:`_srp_bucket_frame`
-    instead: signature cost scales with ROWS x tables x planes x dim,
-    and interpreted higher-order-function evaluation of that product
-    was the dominant ANN cost (measured ~12 s for 1000 rows x 64
-    signatures at 64 dims) — while flat unrolling to codegen was worse
-    still (n_tables x n_planes x dim terms put Janino compilation at
-    ~150 s, and literal-hoisted plane arrays ballooned Catalyst
-    analysis to ~30 s). The Arrow kernel computes the same projections
-    as one BLAS matmul per batch. Signs only pick CANDIDATE buckets —
-    every graded similarity value comes from the bit-exact JVM rescore
-    — so kernel/expression rounding differences cannot move results,
-    only (negligibly, at sign boundaries) recall."""
-    v = as_double(vec)
-    idx = F.sequence(F.lit(0), F.size(v) - 1)
-    acc = F.lit(0).cast("long")
-
-    def plane_at(p: int):
-        # closure, not a default-arg lambda (which would bind transform's
-        # index argument and collapse every plane to the same vector)
-        return lambda i: _plane_component(p, i, seed)
-
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.transform(idx, plane_at(p)), lambda x, w: x * w),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        acc = acc + F.when(proj >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return acc
 
 
 def _srp_bucket_frame(
@@ -460,12 +413,17 @@ def _srp_bucket_frame(
     one Arrow/numpy pass: all n_tables x n_planes projections are a
     single (batch x dim) @ (dim x T*P) matmul per Arrow batch.
 
-    The hyperplanes come from :func:`_plane_literals` — the exact
-    values the Column form uses. The id and vector columns pass
-    through Arrow untouched (IEEE754 round-trip is exact), so
-    downstream norms/rescoring are computed JVM-side on identical
-    bits. Buckets choose candidates only; see :func:`srp_signature`
-    for why kernel-vs-fold rounding cannot move graded values."""
+    Signature cost scales with ROWS x tables x planes x dim. As an
+    interpreted higher-order-function fold it was the dominant ANN
+    cost (measured ~12 s for 1000 rows x 64 signatures at 64 dims),
+    and flat unrolling to codegen was worse still (Janino compilation
+    ~150 s). The hyperplanes come from :func:`_plane_literals`. The id
+    and vector columns pass through Arrow untouched (IEEE754
+    round-trip is exact), so downstream norms/rescoring are computed
+    JVM-side on identical bits. Signs only pick CANDIDATE buckets and
+    every graded similarity comes from the bit-exact JVM rescore, so
+    kernel rounding at sign boundaries can move recall (negligibly),
+    never graded values."""
     import numpy as np
 
     planes = [
@@ -2408,7 +2366,7 @@ def farthest_first_seeds(
     TakeOrderedAndProject); chosen seeds ride as k×dim literals, so
     nothing but one row per step reaches the driver."""
     v = as_double(F.col(vec_col))
-    base = df.select(F.col(id_col).alias("id"), v.alias("v")).localCheckpoint()
+    base = cut(df.select(F.col(id_col).alias("id"), v.alias("v")))
     first = base.orderBy("id").limit(1).collect()[0]
     chosen = [(0, first["id"], list(first["v"]))]
     for t in range(1, k):

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.rebalance import cut
+
 
 def append_evolved(df: DataFrame, path: str) -> dict:
     """Append ``df`` to the parquet table at ``path`` under the
@@ -74,6 +76,6 @@ def read_ignoring_corrupt(spark: SparkSession, path: str) -> DataFrame:
     prev = spark.conf.get(key)
     spark.conf.set(key, "true")
     try:
-        return spark.read.parquet(path).localCheckpoint()
+        return cut(spark.read.parquet(path))
     finally:
         spark.conf.set(key, prev)

@@ -11,7 +11,7 @@ prefix scan, with the data moving through exactly ONE exchange:
 1. range-partition on the order columns (each partition owns a
    contiguous key range) and sort WITHIN partitions — a narrow,
    spill-able sort, no further exchange;
-2. pin the partitioning with an eager ``localCheckpoint``:
+2. pin the partitioning with an eager ``rebalance.cut``:
    RangePartitioner samples split points with an RDD-id-derived seed,
    so without pinning, the totals job and the output job would
    re-partition DIFFERENTLY and offsets would land on the wrong
@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sftp_data_ingestion_spark.rebalance import cut
+
 
 def global_running_sum(
     df: DataFrame,
@@ -57,7 +59,7 @@ def global_running_sum(
         df.repartitionByRange(n, *[F.col(c) for c in order_by])
         .sortWithinPartitions(*[F.col(c) for c in order_by])
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
     # P partition totals, JVM-side -> exclusive scan on the driver
     totals = {

@@ -27,6 +27,8 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.rebalance import cut
+
 _UNIT_US = {
     "second": 1_000_000,
     "minute": 60 * 1_000_000,
@@ -150,7 +152,7 @@ def asof_join(
         # final running right-payload of each partition, one row per
         # partition — is prefix-scanned (P rows, trivially on the
         # driver-side window) and broadcast back as the carry-in for
-        # partitions whose match precedes their range. localCheckpoint
+        # partitions whose match precedes their range. The cut
         # pins the partitioning so the summary pass and the main pass
         # see identical partition ids.
         pid, run, rn = "__asof_pid", "__asof_run", "__asof_rn"
@@ -165,7 +167,7 @@ def asof_join(
                 ),
             )
             .withColumn(rn, F.row_number().over(wp))
-            .localCheckpoint(eager=False)
+            .transform(cut, eager=False)
         )
         finals = part.groupBy(pid).agg(F.max_by(run, rn).alias("__asof_f"))
         wc = (

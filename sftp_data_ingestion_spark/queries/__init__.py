@@ -147,34 +147,21 @@ def _family_rank(name: str) -> int:
 # they can be unpinned (the artifact scan handles the rotation again).
 # Every query an optimization round rewrites MUST be added here.
 REGRADE_FIRST: tuple[str, ...] = (
-    # r13 rewrites (engine swap / connected-components superstep /
-    # shared-layout markers), driver-regraded never or pre-rewrite:
-    "v_ivf_ann_topk",
-    "v_ivf_ann_recall",
+    # near-dup, curation and connected-components consumers: their
+    # candidate-verify tail (ext/dedup.verify_candidates) or their
+    # lineage cuts (rebalance.cut) were rewritten since they were last
+    # graded
     "v_embedding_neardup_clusters",
     "z_entity_resolution",
     "d_neardup_best_survivor",
     "d_minhash_lsh_near_dup_bucketed",
     "curation_e2e",
-    # r14 rewrites land here as the round touches them:
     "d_minhash_lsh_near_dup",
-    "pedidos_pipeline_flagship",
-    "z4_sparse_tfidf_topk",
-    "z4_sparse_tfidf_topk_bucketed",
-    "v_cosine_topk_bruteforce",
     "d_neardup_clusters",
     "v_mutual_knn_clusters",
-    "d_incremental_near_dup",
-    # r14 session-2 rewrites (broadcast id prefilter, model-first LM
-    # joins, CC superstep fusion, session-agg pre-spread):
     "curation_pipeline",
-    "corpus_release_e2e",
     "z3_contrastive_triplets",
     "d_lsh_recall_measured",
-    "z3_bigram_cross_entropy",
-    "z3_kneser_ney_xent",
-    "t_ccnet_perplexity_buckets",
-    "s_sessionize_batch",
 )
 
 

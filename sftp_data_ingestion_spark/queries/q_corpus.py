@@ -49,6 +49,7 @@ from sftp_data_ingestion_spark.ext.dedup import (
     strip_boilerplate_chunks,
 )
 from sftp_data_ingestion_spark.queries.registry import query, table
+from sftp_data_ingestion_spark.rebalance import cut
 
 _NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
@@ -399,7 +400,7 @@ def _stream_ingest_admitted(spark, sf_dir):
         )
         # one materialization: the corpus write + four chunk writes
         # below would otherwise each rescan parquet + re-union
-        .localCheckpoint()
+        .transform(cut)
     )
     landing = tempfile.mkdtemp(prefix="ingest_landing_")
     corpus_path = tempfile.mkdtemp(prefix="ingest_corpus_") + "/corpus"
@@ -566,7 +567,7 @@ SELECT seed AS custkey, node AS suppkey,
 FROM walk WHERE is_supp GROUP BY 1, 2
 """)
         # materialize while the conf is in effect; the result is tiny
-        out = out.localCheckpoint()
+        out = cut(out)
     finally:
         spark.conf.set(key, prev)
     return out
@@ -1034,7 +1035,7 @@ def z3_bpe_train_merges(spark, sf_dir):
     # (measured: no session-global conf flip needed — an earlier
     # shape mutated spark.sql.shuffle.partitions here, which a
     # concurrent query on the shared session would have observed)
-    return train_bpe_merges(d, n_merges=3).localCheckpoint()
+    return cut(train_bpe_merges(d, n_merges=3))
 
 
 from sftp_data_ingestion_spark.ext.bpe import (  # noqa: E402
@@ -1055,7 +1056,7 @@ def z3_bpe_token_counts(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     # tiny per-step aggregates: AQE coalescing, no conf flip (see
     # z3_bpe_train_merges)
-    return bpe_token_counts(d, n_merges=3).localCheckpoint()
+    return cut(bpe_token_counts(d, n_merges=3))
 
 
 from sftp_data_ingestion_spark.ext.bpe import (  # noqa: E402
@@ -1078,7 +1079,7 @@ def z3_bpe_fertility_by_source(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     # tiny per-step aggregates: AQE coalescing, no conf flip (see
     # z3_bpe_merges; measured equal-or-faster without the flip)
-    return bpe_fertility_by_source(d, n_merges=3).localCheckpoint()
+    return cut(bpe_fertility_by_source(d, n_merges=3))
 
 
 @query(
@@ -1197,7 +1198,7 @@ def st_stream_release_e2e(spark, sf_dir):
     flagged = (
         scored.withColumn("rn", F.row_number().over(dw))
         .drop("h")
-        .localCheckpoint()
+        .transform(cut)
     )
     drops = flagged.agg(
         F.sum(F.when(~F.col("gated"), 1).otherwise(0))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from sftp_data_ingestion_spark.ext import textstats as ts
 from sftp_data_ingestion_spark.queries.registry import query, table
+from sftp_data_ingestion_spark.rebalance import cut
 
 _KNUTH = 2654435761
 _BUCKETS = 10000
@@ -319,7 +320,7 @@ def x_dsir_importance(spark, sf_dir):
         )
         .groupBy("doc_id", "source", "f")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(cut)
     )
     is_tgt = F.col("source").isin("src0", "src1").cast("long")
     counts = feat.groupBy("f").agg(

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from sftp_data_ingestion_spark import streaming as st
 from sftp_data_ingestion_spark.queries.registry import query, table
+from sftp_data_ingestion_spark.rebalance import cut
 
 _run_seq = itertools.count()
 
@@ -723,7 +724,7 @@ def st_stream_ingest_stateful(spark, sf_dir):
                 _STATEFUL_PLANTS, "doc_id long, text string"
             )
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     landing = tempfile.mkdtemp(prefix="stateful_landing_")
     corpus_path = tempfile.mkdtemp(prefix="stateful_corpus_") + "/corpus"

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from sftp_data_ingestion_spark.ext import dedup as dd
 from sftp_data_ingestion_spark.ext import textstats as ts
 from sftp_data_ingestion_spark.queries.registry import query, table
+from sftp_data_ingestion_spark.rebalance import cut
 
 # ---------------------------------------------------------------------------
 # end-to-end curation pipeline (registered FIRST in this module so it
@@ -270,7 +271,7 @@ def curation_e2e(spark, sf_dir):
     # s1 3.98 -> 2.6 s). Same organize-once boundary as the survivor
     # checkpoint below — a production pipeline stages the gated corpus
     # before LSH anyway.
-    kept = kept.localCheckpoint(eager=False)
+    kept = cut(kept, eager=False)
     # near-dup pairs come off the SHARED bucketed signature layout
     # (organize once per sweep, zero band exchanges), restricted to
     # the gated set — banding is per-document, so full-table candidate
@@ -288,7 +289,7 @@ def curation_e2e(spark, sf_dir):
     # contamination probe and the anti-join) and its lineage holds the
     # whole LSH + closure DAG — recomputing that per branch tripled
     # the run. At 100 TB this is the point where a production pipeline
-    # writes survivors to a table; localCheckpoint is the in-session
+    # writes survivors to a table; the cut is the in-session
     # equivalent (same pattern as pagerank/prefix supersteps).
     # repartition BEFORE the checkpoint: the broadcast join preserves
     # the scan's split count, so on the small fixture the survivor set
@@ -306,7 +307,7 @@ def curation_e2e(spark, sf_dir):
         .repartition(
             spark.sparkContext.defaultParallelism, F.col("doc_id")
         )
-        .localCheckpoint()
+        .transform(cut)
     )
     contaminated = (
         dd.contamination_report(surv, evalset)
@@ -944,23 +945,10 @@ def _bucketed_neardup_pairs_t05(spark, sf_dir):
     # shingle side's semi-join) — without the cut the plan expands the
     # join five times (measured: the pair stage was 2.2 s of
     # curation_e2e's near-dup stage at sf0.1).
-    cands = dd.lsh_candidate_pairs_from_banded(banded).localCheckpoint(
-        eager=False
+    cands = cut(dd.lsh_candidate_pairs_from_banded(banded), eager=False)
+    return dd.verify_candidates(
+        cands, table(spark, sf_dir, "documents"), threshold=0.5
     )
-    ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .unionAll(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    # broadcast the candidate-id set (guide §3.2): the checkpointed
-    # cands are an RDD leaf without size stats, so the planner was
-    # sort-merge semi-joining — shuffling the documents scan AND the
-    # id set (4 exchanges across the two verify sides). Candidate ids
-    # are the near-dup working set, orders smaller than the corpus.
-    d = table(spark, sf_dir, "documents").join(
-        F.broadcast(ids), "doc_id", "left_semi"
-    )
-    return dd.jaccard_verify(cands, d, threshold=0.5)
 
 
 @query("d_minhash_lsh_near_dup_bucketed", oracle=_MINHASH_NEARDUP_ORACLE)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from sftp_data_ingestion_spark.ext import dedup as dd
 from sftp_data_ingestion_spark.queries.registry import query, table
+from sftp_data_ingestion_spark.rebalance import cut
 
 # repo-wide token stream: lower, collapse runs of whitespace, split on
 # the single space (matches string_split(s, ' ') in every oracle)
@@ -206,11 +207,11 @@ def z4_sparse_tfidf_topk(spark, sf_dir):
     # retrieval pipeline materializes as a term-BUCKETED table
     # (`term_bucketed_postings` — the code path, plan-pinned
     # exchange-free), which is what makes the posting joins
-    # exchange-free at scale; localCheckpoint is the in-session
+    # exchange-free at scale; the cut is the in-session
     # equivalent (same pattern as curation_e2e's survivor set).
     tf = _tf_postings(d).repartition(
         spark.sparkContext.defaultParallelism, "term"
-    ).localCheckpoint()
+    ).transform(cut)
     return tfidf_topk_from_postings(
         d, tf, broadcast_idf=True, materialize_weights=True
     )
@@ -227,8 +228,8 @@ def tfidf_topk_from_postings(
     layout is what makes the lever testable: both paths must produce
     identical rows (pinned in tests).
 
-    ``materialize_weights`` cuts the WEIGHTED postings ``w`` with a
-    ``localCheckpoint`` (r14, guide §2.4): ``w`` feeds THREE consumers
+    ``materialize_weights`` cuts the WEIGHTED postings ``w`` with
+    ``rebalance.cut`` (r14, guide §2.4): ``w`` feeds THREE consumers
     (norms, probe side, corpus side of the pair join), and without the
     cut each consumer re-expands the full idf derivation — the r13
     before-plan shows the n_docs countDistinct + df-count aggregate
@@ -247,7 +248,7 @@ def tfidf_topk_from_postings(
     # (plain term-key shuffle join; see _tfidf_weights)
     w = _tfidf_weights(tf, n_docs, broadcast_idf=broadcast_idf)
     if materialize_weights:
-        w = w.localCheckpoint()
+        w = cut(w)
     # zero-norm guard: a doc whose every term has df=N gets norm 0;
     # Spark division yields NULL but DuckDB yields inf/NaN — drop such
     # docs in both engines (oracle mirrors with HAVING nrm > 0)
@@ -1283,7 +1284,7 @@ def corpus_release_e2e(spark, sf_dir):
         scored.withColumn("rn", F.row_number().over(dw))
         .drop("h")
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .localCheckpoint()
+        .transform(cut)
     )
     drops = flagged.agg(
         F.sum(F.when(~F.col("gated"), 1).otherwise(0))

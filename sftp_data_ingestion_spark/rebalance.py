@@ -1,4 +1,5 @@
-"""Scan-parallelism rebalancing for CPU-heavy stages.
+"""Physical-layout helpers: scan-parallelism rebalancing for CPU-heavy
+stages (:func:`fan_out`) and the one lineage-cut policy (:func:`cut`).
 
 At warehouse scale a parquet scan yields at least one split per core
 (128 MB splits over TBs of input), so per-row expression work
@@ -28,6 +29,11 @@ planning cost for large plans. File stats are only fetched on the
 small-scan branch (fewer files than cores), so the driver does at most
 ``defaultParallelism - 1`` cheap metadata RPCs; a many-file scan
 short-circuits on the file count alone.
+
+:func:`cut` stands in for the reference's durable staging tables: every
+operator that materializes an intermediate result goes through it, so a
+deployment picks local or reliable cuts in one place (the SparkContext's
+checkpoint dir) instead of per call site.
 """
 
 from __future__ import annotations
@@ -111,3 +117,20 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])
     return df.repartition(target)
+
+
+def cut(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: the materialized intermediate every later
+    action reads instead of re-running the plan above it.
+
+    Without a checkpoint dir on the SparkContext (local mode, tests) it
+    is exactly ``df.localCheckpoint(eager)``: blocks on executor-local
+    storage, lost with the executor. When the deployment has set one
+    (``sc.setCheckpointDir`` on a replicated store), it is a reliable
+    ``df.checkpoint()``, always eager: Spark writes a lazy reliable
+    checkpoint only for the last marked RDD of a job, so a cut below
+    another cut would never be written and every later job would
+    recompute it."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager)
+    return df.checkpoint(eager=True)

@@ -154,8 +154,3 @@ FIXTURE_TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver fixture table (column-pruned/pushed-down parquet)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -2,7 +2,13 @@
 closure correctness on shapes LSH pairs produce (cliques, chains,
 singletons) — the keep/drop layer above pair detection."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pyspark.sql.functions as F
+import pytest
 
 from sftp_data_ingestion_spark.ext import dedup as dd
 
@@ -30,29 +36,88 @@ def test_cc_clique_one_step(spark):
     assert got == {0: 0, 1: 0, 2: 0}
 
 
-def test_cc_reliable_checkpoint_same_components(spark, tmp_path):
-    """The cluster-scale escape hatch (r13 VERDICT #10):
-    ``reliable_checkpoint=True`` cuts superstep lineage with
-    ``checkpoint()`` to the session checkpoint dir instead of
-    executor-local ``localCheckpoint()``. Components must be
-    identical in both modes on a shape that needs several supersteps
-    (chain) plus a singleton."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "cc_ckpt"))
-    v = spark.createDataFrame([(i,) for i in range(6)], "id long")
-    e = spark.createDataFrame(
-        [(0, 1), (1, 2), (3, 4)], "id_a long, id_b long"
-    )
-    local = {
-        r["id"]: r["component"]
+# Runs connected_components twice in a fresh session: with local cuts,
+# then with reliable cuts after setCheckpointDir. A SparkContext's
+# checkpoint dir cannot be unset, so setting it on the shared test
+# session would switch every later test to reliable cuts. A UDF on the
+# edges counts every edge row the pipeline evaluates; the vertices are
+# a range, so the semi-joins broadcast them and no shuffle output below
+# the UDF could hide a recompute.
+_CUT_MODES_PROBE = r"""
+import json, os, sys
+
+import pyspark.sql.functions as F
+
+from sftp_data_ingestion_spark.ext import dedup as dd
+from sftp_data_ingestion_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+sc = spark.sparkContext
+seen = sc.accumulator(0)
+
+
+@F.udf("long")
+def counted(x):
+    seen.add(1)
+    return x
+
+
+v = spark.range(6)
+e = spark.createDataFrame(
+    [(0, 1), (1, 2), (3, 4)], "id_a long, id_b long"
+).select(counted("id_a").alias("id_a"), "id_b")
+
+
+def run():
+    before = seen.value
+    got = sorted(
+        (r["id"], r["component"])
         for r in dd.connected_components(v, e).collect()
-    }
-    reliable = {
-        r["id"]: r["component"]
-        for r in dd.connected_components(
-            v, e, reliable_checkpoint=True
-        ).collect()
-    }
-    assert local == reliable == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
+    )
+    return got, seen.value - before
+
+
+out = {"local": run()}
+sc.setCheckpointDir(sys.argv[1])
+out["reliable"] = run()
+out["ckpt_files"] = sum(len(f) for _, _, f in os.walk(sys.argv[1]))
+print(json.dumps(out))
+"""
+
+
+@pytest.fixture(scope="module")
+def cut_modes(tmp_path_factory):
+    ckpt = tmp_path_factory.mktemp("cc_ckpt")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    res = subprocess.run(
+        [sys.executable, "-c", _CUT_MODES_PROBE, str(ckpt)],
+        capture_output=True, text=True, env=env, cwd=repo, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    return json.loads(res.stdout.strip().splitlines()[-1])
+
+
+def test_cc_reliable_checkpoint_same_components(cut_modes):
+    """With a checkpoint dir set, every cut is a reliable checkpoint
+    written to that dir; components must be identical to the local
+    cuts on a shape that needs several supersteps (chain) plus a
+    singleton."""
+    want = [[0, 0], [1, 0], [2, 0], [3, 3], [4, 3], [5, 5]]
+    assert cut_modes["local"][0] == cut_modes["reliable"][0] == want
+    assert cut_modes["ckpt_files"] > 0
+
+
+def test_cc_reliable_cuts_run_edge_pipeline_once(cut_modes):
+    """The setup cut on the symmetrized edges is written once, so the
+    edge pipeline runs once across all supersteps, exactly as often as
+    with local cuts (whose blocks are cached when first computed). A
+    lazy reliable checkpoint there would never be written (Spark writes
+    only a job's last marked RDD), and each of the chain's 3 supersteps
+    would recompute the edges: 4x the local count."""
+    assert cut_modes["ckpt_files"] > 0  # the cuts really were reliable
+    assert cut_modes["local"][1] > 0
+    assert cut_modes["reliable"][1] == cut_modes["local"][1]
 
 
 def test_neardup_clusters_marks_survivors(spark):

@@ -389,6 +389,27 @@ def test_no_collect_in_operator_modules():
     assert offenders == []
 
 
+def test_lineage_cuts_and_candidate_id_broadcast_have_one_home():
+    """Every lineage cut goes through rebalance.cut, so a deployment
+    turns all of them into reliable checkpoints by setting one
+    checkpoint dir; the candidate-id broadcast semi-join exists once,
+    in ext/dedup.verify_candidates."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sftp_data_ingestion_spark"
+    cut_sites, id_broadcasts = [], 0
+    for f in root.rglob("*.py"):
+        text = f.read_text()
+        if f.name != "rebalance.py" and re.search(
+            r"localCheckpoint\(|\.checkpoint\(", text
+        ):
+            cut_sites.append(str(f.relative_to(root)))
+        id_broadcasts += text.count("F.broadcast(ids")
+    assert cut_sites == []
+    assert id_broadcasts == 1
+
+
 def test_salted_agg_two_stage_shape(spark):
     """Salted aggregation: first shuffle on (key, salt) — uniform —
     then a tiny shuffle on key; never a single hot-key reducer."""

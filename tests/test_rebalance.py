@@ -1,12 +1,17 @@
 """fan_out scan-rebalance tests: split estimation from file metadata
 (never df.rdd — that would physically plan the query on the driver)
-and the no-op conditions that make it free at scale."""
+and the no-op conditions that make it free at scale. Plus the local
+branch of the lineage-cut policy; the reliable branch needs a fresh
+session (tests/test_dedup_clusters.py)."""
+
+import re
 
 import pyspark.sql.functions as F
 
 from sftp_data_ingestion_spark.rebalance import (
     _estimated_splits,
     _parse_bytes,
+    cut,
     fan_out,
 )
 
@@ -63,3 +68,22 @@ def test_estimated_splits_counts_size_over_max_bytes(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
     # at the default 128MB every tiny file is one split
     assert _estimated_splits(df, files) == len(files)
+
+
+def test_cut_without_checkpoint_dir_is_local_checkpoint(spark):
+    """With no checkpoint dir (local mode, tests, the benchmark), cut
+    is localCheckpoint: executor-local blocks, no checkpoint file, and
+    the same ExistingRDD scan; the lazy form waits for an action."""
+    assert spark.sparkContext.getCheckpointDir() is None
+    df = spark.range(100).withColumn("x", F.col("id") * 2)
+    plans = []
+    for out in (cut(df), df.localCheckpoint()):
+        qe = out._jdf.queryExecution()
+        rdd = qe.logical().rdd()
+        assert rdd.isCheckpointed() and rdd.isLocallyCheckpointed()
+        assert rdd.getCheckpointFile().isEmpty()
+        plans.append(re.sub(r"#\d+L?", "", qe.executedPlan().toString()))
+    assert plans[0] == plans[1]
+    assert "Scan ExistingRDD" in plans[0]
+    lazy = cut(df, eager=False)._jdf.queryExecution().logical().rdd()
+    assert lazy.isLocallyCheckpointed() and not lazy.isCheckpointed()
