@@ -65,8 +65,6 @@ def cmd_load(spark: SparkSession, args) -> dict:
 def cmd_upsert(spark: SparkSession, args) -> dict:
     from pyspark.sql.utils import AnalysisException
 
-    from sftp_data_ingestion_spark.io.sinks import recover_interrupted_swap
-    from sftp_data_ingestion_spark.operators.clean import clean_staging
     from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
 
     p = _paths(args.warehouse)
@@ -76,16 +74,7 @@ def cmd_upsert(spark: SparkSession, args) -> dict:
         return {"upserted": 0, "reason": "no bronze data"}
     if getattr(args, "buckets", None):
         return _upsert_bucketed(spark, p, staging, args.buckets)
-    # a crash inside a previous swap leaves dw missing + dw.old intact;
-    # repair BEFORE the read below treats "missing" as "first run"
-    recover_interrupted_swap(p["dw"])
-    try:
-        dw = spark.read.parquet(p["dw"])
-    except AnalysisException:
-        dw = clean_staging(staging).limit(0)
-    # crash-safe rewrite: full result to a temp dir, then swap (the
-    # Delta MERGE equivalent on plain parquet)
-    return {"dw_rows": upsert_and_swap(dw, staging, p["dw"])}
+    return {"dw_rows": upsert_and_swap(staging, p["dw"])}
 
 
 def _upsert_bucketed(spark: SparkSession, p: dict, staging, buckets: int) -> dict:

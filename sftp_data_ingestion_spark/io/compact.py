@@ -23,10 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from sftp_data_ingestion_spark.io.sinks import (
-    atomic_swap_parquet,
-    recover_interrupted_swap,
-)
+from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_swapped
 
 
 def _data_files(path: str) -> list[tuple[str, int]]:
@@ -53,7 +50,7 @@ def compact_parquet_dir(
     table is pure write amplification. Returns
     ``{files_before, files_after, bytes_total, compacted}``.
     """
-    recover_interrupted_swap(path)
+    df = read_swapped(spark, path)
     # a hive-partitioned layout (e.g. the bucketed DW's dw_bucket=N
     # dirs) must keep its directory structure: a flat rewrite would
     # fold the partition column into the data files and break every
@@ -62,7 +59,7 @@ def compact_parquet_dir(
         e
         for e in os.listdir(path)
         if "=" in e and os.path.isdir(os.path.join(path, e))
-    ] if os.path.isdir(path) else []
+    ] if df is not None else []
     if parts:
         raise ValueError(
             f"{path} is hive-partitioned ({parts[0]}, ...); compact each "
@@ -79,8 +76,7 @@ def compact_parquet_dir(
             "compacted": False,
         }
     n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path).coalesce(n_out)
-    atomic_swap_parquet(df, path)
+    atomic_swap_parquet(df.coalesce(n_out), path)
     n_after = len(_data_files(path))
     return {
         "files_before": n_before,

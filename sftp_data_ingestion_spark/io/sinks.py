@@ -11,6 +11,14 @@ Reference (``/root/reference/python/02_load_stage_pedidos.py``):
   ``__dup_{ts}`` suffix. Files are COPIED, never removed from
   ``novos/`` — re-processing is prevented by the ledger (S10), which
   this module records alongside the route.
+
+It is also the one home for rewriting a parquet table in place — the
+guarantee the reference gets from PostgreSQL transactions around
+stage 3 and 4: :func:`atomic_swap_parquet` for whole tables,
+:func:`overwrite_partitions` for a partition subset, and
+:func:`read_swapped` for reading a table the swap maintains. New files
+are always staged next to the table, never in the system temp dir, so
+every rename stays on one filesystem.
 """
 
 from __future__ import annotations
@@ -19,7 +27,7 @@ import os
 import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def append_bronze(df: DataFrame, bronze_path: str) -> None:
@@ -48,18 +56,28 @@ def route_file(path: str, ok: bool, lidos_dir: str, erros_dir: str) -> str:
     return safe_copy(path, lidos_dir if ok else erros_dir)
 
 
-def recover_interrupted_swap(path: str) -> bool:
+def _recover_interrupted_swap(path: str) -> None:
     """Repair the one non-atomic window of :func:`atomic_swap_parquet`:
     a crash between the two renames leaves ``<path>.old`` holding the
-    only copy while ``path`` is missing. MUST be called before reading
-    ``path`` by any caller that treats a missing table as "first run"
-    — otherwise that caller silently rebuilds from scratch and the
-    table history is lost. Returns True when a recovery happened."""
+    only copy while ``path`` is missing. Runs before every read of a
+    swapped table (:func:`read_swapped`) and before every swap, so no
+    caller mistakes the missing table for a first run and silently
+    rebuilds it from scratch, losing its history."""
     old = path + ".old"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
-        return True
-    return False
+
+
+def read_swapped(spark: SparkSession, path: str) -> DataFrame | None:
+    """Open a table that :func:`atomic_swap_parquet` rewrites: repair
+    an interrupted swap first, then return the table, or ``None`` when
+    it does not exist yet (the caller's first run). A plain exists
+    check, not a caught ``AnalysisException``: the failed read would
+    log a harmless but alarming stack trace on every first run."""
+    _recover_interrupted_swap(path)
+    if not os.path.exists(path):
+        return None
+    return spark.read.parquet(path)
 
 
 def atomic_swap_parquet(df: DataFrame, path: str) -> int:
@@ -69,18 +87,19 @@ def atomic_swap_parquet(df: DataFrame, path: str) -> int:
     store is a directory. Returns the new row count (one read of the
     freshly-written files, which doubles as a write verification).
 
-    The swap is two renames, so there IS a crash window between them
-    where ``path`` is absent and ``<path>.old`` holds the data;
-    :func:`recover_interrupted_swap` repairs it and must run before
-    any "missing table == first run" read (both CLI upsert and the
-    streaming merge do). Stale ``.tmp``/``.old`` leftovers from a
-    crashed earlier run are cleared up front so a retry never fails
-    the rename into a non-empty directory. Same-session readers must
-    ``spark.catalog.refreshByPath`` (done here) because the swap
-    happens behind Spark's file-listing cache.
+    Both scratch dirs are siblings of ``path``, so the renames stay on
+    one filesystem. The swap is two renames, so there IS a crash
+    window between them where ``path`` is absent and ``<path>.old``
+    holds the data; :func:`read_swapped` repairs it before handing
+    out the table, and so does this function before it writes. Stale
+    ``.tmp``/``.old`` leftovers from a crashed earlier run are cleared
+    up front so a retry never fails the rename into a non-empty
+    directory. Same-session readers must ``spark.catalog.refreshByPath``
+    (done here) because the swap happens behind Spark's file-listing
+    cache.
     """
     spark = df.sparkSession
-    recover_interrupted_swap(path)
+    _recover_interrupted_swap(path)
     tmp = path + ".tmp"
     old = path + ".old"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -101,17 +120,19 @@ def overwrite_partitions(
     """Dynamic partition overwrite: replace ONLY the partitions the
     batch contains, leave every other partition's files untouched —
     the daily-reprocess write pattern (re-land one day of a
-    date-partitioned table without rewriting the year). Uses Spark's
-    ``partitionOverwriteMode=dynamic`` so the partition set to
-    replace is discovered from the data, not declared; with the
+    date-partitioned table without rewriting the year). With the
     default STATIC mode the same ``overwrite`` would wipe the whole
     table — the classic footgun this wrapper exists to fence off.
-    The conf is set per-write and restored."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
+
+    The mode is a write option, not the session conf, so concurrent
+    writers in the same session keep their own mode. Spark's commit
+    stages the new files under ``path`` (``.spark-staging-*``) and
+    renames each partition into place at job commit, after every task
+    has finished reading — so ``df`` may itself read the partitions it
+    replaces from ``path``."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )

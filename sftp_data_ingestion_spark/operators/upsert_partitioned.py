@@ -20,14 +20,20 @@ O(affected buckets):
    set over the pruned subset. Bucket residency never changes on
    update (hash of an unchanged key), so the merged output holds
    exactly the affected buckets, complete.
-4. **Swap**: merged buckets are written to a scratch dir and swapped
-   into the DW directory-by-directory — untouched buckets' files are
+4. **Commit**: the merged buckets go through
+   :func:`~sftp_data_ingestion_spark.io.sinks.overwrite_partitions`
+   (dynamic partition overwrite): Spark stages them under the DW
+   directory and, at job commit, replaces exactly the bucket
+   directories the output contains — untouched buckets' files are
    never read, rewritten, or moved.
 
-On a production cluster the swap step is the job of a transactional
+On a production cluster the commit is the job of a transactional
 table format (Delta/Iceberg ``MERGE INTO`` with the same policy
-expressions); the directory swap here has the same at-least-once
-semantics as ``operators/archive.py`` and is documented as such.
+expressions). Here Spark's job commit replaces each touched bucket
+by a delete and a rename on the DW's own filesystem. A crash inside
+that loop can leave a touched bucket deleted while its merged files
+still sit under ``<dw>/.spark-staging-*``; nothing repairs that
+automatically, but no rows have left the DW directory.
 Reference parity: ``/root/reference/python/03_upsert_dw_pedidos.py:202-246``
 (ON CONFLICT upsert); the bucketing has no reference equivalent —
 PostgreSQL's btree index plays that role.
@@ -35,14 +41,12 @@ PostgreSQL's btree index plays that role.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.io.sinks import overwrite_partitions
 from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
 
 BUCKET_COL = "dw_bucket"
@@ -119,31 +123,17 @@ def upsert_partitioned(
         set_once_cols=set_once_cols,
     ).withColumn(BUCKET_COL, bucket_of(key, num_buckets))
 
-    # stage the merged buckets, then swap directories; never overwrite
-    # the path being read (classic self-overwrite hazard). Production:
-    # Delta/Iceberg MERGE INTO commits this atomically.
-    scratch = tempfile.mkdtemp(prefix="dw_upsert_")
-    try:
-        out = os.path.join(scratch, "out")
-        obs = Observation()
-        (
-            merged.observe(obs, F.count(F.lit(1)).alias("n"))
-            .repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out)
-        )
-        rows_written = obs.get["n"]  # from the write itself, no re-scan (G1)
-        for b in touched:
-            part = f"{BUCKET_COL}={b}"
-            src, dst = os.path.join(out, part), os.path.join(dw_path, part)
-            if not os.path.isdir(src):
-                continue  # bucket had no rows after merge (empty delta group)
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            shutil.move(src, dst)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    # the pruned read above and this write share dw_path: the dynamic
+    # overwrite replaces the touched buckets only at job commit, after
+    # every task has read its input. Production: Delta/Iceberg MERGE
+    # INTO commits this atomically.
+    obs = Observation()
+    overwrite_partitions(
+        merged.observe(obs, F.count(F.lit(1)).alias("n")).repartition(BUCKET_COL),
+        dw_path,
+        [BUCKET_COL],
+    )
+    rows_written = obs.get["n"]  # from the write itself, no re-scan (G1)
     spark.catalog.refreshByPath(dw_path)
     return {
         "buckets_touched": len(touched),

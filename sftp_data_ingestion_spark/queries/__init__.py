@@ -147,6 +147,12 @@ def _family_rank(name: str) -> int:
 # they can be unpinned (the artifact scan handles the rotation again).
 # Every query an optimization round rewrites MUST be added here.
 REGRADE_FIRST: tuple[str, ...] = (
+    # in-place table rewrites: the bucketed upsert now commits through
+    # io/sinks.overwrite_partitions, and the MV state merge reads its
+    # table through io/sinks.read_swapped
+    "u1_upsert_partitioned",
+    "z_stream_mv_merge",
+    "st_stream_cms_topk",
     # near-dup, curation and connected-components consumers: their
     # candidate-verify tail (ext/dedup.verify_candidates) or their
     # lineage cuts (rebalance.cut) were rewritten since they were last

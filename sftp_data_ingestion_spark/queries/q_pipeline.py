@@ -99,9 +99,8 @@ FROM orders WHERE o_orderkey % 3 = 0
 """
 
 
-@query(
-    "u1_upsert_newer_wins",
-    oracle=f"""
+# the one logical merge all three U1 physical paths are graded against
+_U1_ORACLE = f"""
 WITH dw AS ({_DW_SQL}), delta AS ({_DELTA_SQL})
 SELECT
   COALESCE(o.k, n.k) AS k,
@@ -114,8 +113,10 @@ SELECT
   CASE WHEN o.k IS NULL THEN n.val WHEN n.k IS NULL THEN o.val
        ELSE COALESCE(n.val, o.val) END AS val
 FROM dw o FULL JOIN delta n ON o.k = n.k
-""",
-)
+"""
+
+
+@query("u1_upsert_newer_wins", oracle=_U1_ORACLE)
 def u1_upsert_newer_wins(spark, sf_dir):
     dw, delta = _u1_inputs(spark, sf_dir)
     return upsert_newer_wins(
@@ -155,23 +156,7 @@ def _u1_inputs(spark, sf_dir):
     return dw, delta
 
 
-@query(
-    "u1_upsert_partitioned",
-    oracle=f"""
-WITH dw AS ({_DW_SQL}), delta AS ({_DELTA_SQL})
-SELECT
-  COALESCE(o.k, n.k) AS k,
-  CASE WHEN o.k IS NULL THEN n.ocr WHEN n.k IS NULL THEN o.ocr
-       WHEN n.ocr > o.ocr THEN n.ocr ELSE o.ocr END AS ocr,
-  CASE WHEN o.k IS NULL THEN n.status WHEN n.k IS NULL THEN o.status
-       WHEN n.ocr > o.ocr THEN n.status ELSE o.status END AS status,
-  CASE WHEN o.k IS NULL THEN n.ins WHEN n.k IS NULL THEN o.ins
-       ELSE greatest(o.ins, n.ins) END AS ins,
-  CASE WHEN o.k IS NULL THEN n.val WHEN n.k IS NULL THEN o.val
-       ELSE COALESCE(n.val, o.val) END AS val
-FROM dw o FULL JOIN delta n ON o.k = n.k
-""",
-)
+@query("u1_upsert_partitioned", oracle=_U1_ORACLE)
 def u1_upsert_partitioned(spark, sf_dir):
     """The partition-pruned physical path for the SAME logical merge as
     u1_upsert_newer_wins (identical oracle): materialize the DW in the
@@ -202,23 +187,7 @@ def u1_upsert_partitioned(spark, sf_dir):
     return read_dw(spark, dw_path)
 
 
-@query(
-    "u1_upsert_bucketed",
-    oracle=f"""
-WITH dw AS ({_DW_SQL}), delta AS ({_DELTA_SQL})
-SELECT
-  COALESCE(o.k, n.k) AS k,
-  CASE WHEN o.k IS NULL THEN n.ocr WHEN n.k IS NULL THEN o.ocr
-       WHEN n.ocr > o.ocr THEN n.ocr ELSE o.ocr END AS ocr,
-  CASE WHEN o.k IS NULL THEN n.status WHEN n.k IS NULL THEN o.status
-       WHEN n.ocr > o.ocr THEN n.status ELSE o.status END AS status,
-  CASE WHEN o.k IS NULL THEN n.ins WHEN n.k IS NULL THEN o.ins
-       ELSE greatest(o.ins, n.ins) END AS ins,
-  CASE WHEN o.k IS NULL THEN n.val WHEN n.k IS NULL THEN o.val
-       ELSE COALESCE(n.val, o.val) END AS val
-FROM dw o FULL JOIN delta n ON o.k = n.k
-""",
-)
+@query("u1_upsert_bucketed", oracle=_U1_ORACLE)
 def u1_upsert_bucketed(spark, sf_dir):
     """The 100 TB MERGE regime, graded: the DW side lives as a
     key-BUCKETED catalog table (`operators/bucketed.write_bucketed` —

@@ -15,9 +15,7 @@ _COS_SQL = (
 )
 
 
-@query(
-    "v_cosine_topk_bruteforce",
-    oracle=f"""
+_EXACT_TOPK_ORACLE = f"""
 WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
            FROM embeddings WHERE vec_id < 100),
 c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
@@ -30,8 +28,10 @@ SELECT query_id, neighbor_id, round(sim_full, 6) AS sim FROM (
          ) AS rn
   FROM q a, c b WHERE a.vec_id <> b.vec_id
 ) WHERE rn <= 5
-""",
-)
+"""
+
+
+@query("v_cosine_topk_bruteforce", oracle=_EXACT_TOPK_ORACLE)
 def v_cosine_topk_bruteforce(spark, sf_dir):
     """Exact brute-force cosine top-k on the Arrow/BLAS kernel
     (r13 VERDICT #7; guide §4.2). The expression engine's cost here
@@ -76,22 +76,6 @@ def v_centroid_per_label(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
         )
     )
-
-
-_EXACT_TOPK_ORACLE = f"""
-WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings WHERE vec_id < 100),
-c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-SELECT query_id, neighbor_id, round(sim_full, 6) AS sim FROM (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         {_COS_SQL} AS sim_full,
-         row_number() OVER (
-           PARTITION BY a.vec_id
-           ORDER BY {_COS_SQL} DESC, b.vec_id ASC
-         ) AS rn
-  FROM q a, c b WHERE a.vec_id <> b.vec_id
-) WHERE rn <= 5
-"""
 
 
 @query("v_srp_ann_topk", oracle=_EXACT_TOPK_ORACLE)

@@ -270,27 +270,13 @@ def stream_upsert_to_dw(
     Returns the started StreamingQuery; callers stop() it (or use
     ``processAllAvailable`` to drain in tests).
     """
-    from pyspark.errors import AnalysisException
-
-    from sftp_data_ingestion_spark.io.sinks import recover_interrupted_swap
-    from sftp_data_ingestion_spark.operators.clean import clean_staging
     from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
 
     stream = stream_landing_csv(spark, landing_dir, sep, max_files_per_trigger)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        # a crash inside the previous batch's swap leaves dw missing +
-        # dw.old intact; repair BEFORE treating "missing" as batch #1
-        recover_interrupted_swap(dw_path)
-        try:
-            dw = s.read.parquet(dw_path)
-        except AnalysisException:  # first batch: empty typed DW
-            dw = clean_staging(batch_df).limit(0)
-        upsert_and_swap(dw, batch_df, dw_path)
-
     return (
-        stream.writeStream.foreachBatch(merge_batch)
+        stream.writeStream.foreachBatch(
+            lambda batch_df, _batch_id: upsert_and_swap(batch_df, dw_path)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
@@ -383,22 +369,16 @@ def mv_merge_batch(
     testable). Returns False when the batch was a replay no-op."""
     from sftp_data_ingestion_spark.io.sinks import (
         atomic_swap_parquet,
-        recover_interrupted_swap,
+        read_swapped,
     )
     from sftp_data_ingestion_spark.operators.mv import (
         aggregate_batch,
         merge_mv_state,
     )
 
-    import os
-
-    s = batch_df.sparkSession
-    recover_interrupted_swap(state_path)
     partial = aggregate_batch(batch_df, keys, specs)
-    # plain exists-check instead of catching AnalysisException: the
-    # read probe logs a scary (harmless) stack trace on batch #1
-    if os.path.exists(state_path):
-        state = s.read.parquet(state_path)
+    state = read_swapped(batch_df.sparkSession, state_path)
+    if state is not None:
         last = state.select(F.max("_mv_batch_id")).first()[0]
         if last is not None and last >= batch_id:
             return False  # replayed batch: already merged, no double-add

@@ -385,22 +385,22 @@ def test_archive_batch_id_reuse_with_new_data_raises(spark, tmp_path):
 
 def test_atomic_swap_crash_window_recovery(spark, tmp_path):
     """A crash between the swap's two renames leaves only <path>.old;
-    recover_interrupted_swap must restore it BEFORE any caller treats
-    the missing table as 'first run' (silent full-history loss)."""
+    read_swapped must restore it BEFORE any caller treats the missing
+    table as 'first run' (silent full-history loss)."""
     import os
 
     from sftp_data_ingestion_spark.io.sinks import (
         atomic_swap_parquet,
-        recover_interrupted_swap,
+        read_swapped,
     )
 
     path = str(tmp_path / "dw")
     spark.createDataFrame([("k1",), ("k2",)], "k string").write.parquet(path)
     # simulate the crash window: table renamed aside, swap never landed
     os.rename(path, path + ".old")
-    assert recover_interrupted_swap(path)
-    assert sorted(r["k"] for r in spark.read.parquet(path).collect()) == [
-        "k1", "k2"]
+    recovered = read_swapped(spark, path)
+    assert recovered is not None
+    assert sorted(r["k"] for r in recovered.collect()) == ["k1", "k2"]
     assert not os.path.exists(path + ".old")
     # a stale .old from a COMPLETED swap never blocks the next one
     spark.read.parquet(path).write.parquet(path + ".old")
@@ -409,6 +409,83 @@ def test_atomic_swap_crash_window_recovery(spark, tmp_path):
     )
     assert n == 1
     assert [r["k"] for r in spark.read.parquet(path).collect()] == ["k3"]
+    assert not os.path.exists(path + ".old")
+    assert read_swapped(spark, str(tmp_path / "absent")) is None
+
+
+def _cron_upsert_case(spark, tmp_path):
+    """Two cron cycles through the CLI stages. The first lands K1 and
+    K2; its archive empties the bronze, so the second cycle's bronze
+    holds only K1's update. K2 survives only if the second upsert
+    merged into the DW the first one wrote."""
+    from types import SimpleNamespace
+
+    from sftp_data_ingestion_spark import cli
+    from tests.test_cli import K1, K2, _setup_remote
+
+    remote = _setup_remote(tmp_path)
+    later = tmp_path / "pedidos_2.csv"
+    (remote / "pedidos_2.csv").rename(later)
+    wh = str(tmp_path / "wh")
+    args = SimpleNamespace(
+        source=str(remote), landing=str(tmp_path / "novos"), warehouse=wh,
+        buckets=None, batch_id=None,
+    )
+
+    def cycle():
+        cli.cmd_ingest(spark, args)
+        cli.cmd_load(spark, args)
+        cli.cmd_upsert(spark, args)
+        cli.cmd_archive(spark, args)
+
+    def second_step():
+        later.rename(remote / "pedidos_2.csv")
+        cycle()
+        return {
+            r["chave_nfe"]: r["pedido"]
+            for r in spark.read.parquet(f"{wh}/dw").collect()
+        }
+
+    cycle()
+    return f"{wh}/dw", second_step, {K1: "P-1-upd", K2: "P-2"}
+
+
+def _mv_merge_case(spark, tmp_path):
+    """Two MV merge steps; the second batch adds to the first batch's
+    group only if it merged into the stored state."""
+    from sftp_data_ingestion_spark import streaming
+
+    state = str(tmp_path / "mv_state")
+    specs = {"n": ("count", "event_id"), "s": ("sum", "value")}
+    schema = "event_type string, event_id long, value double"
+
+    def step(rows, batch_id):
+        batch = spark.createDataFrame(rows, schema)
+        assert streaming.mv_merge_batch(batch, batch_id, state, ["event_type"], specs)
+
+    def second_step():
+        step([("view", 3, 5.0)], 1)
+        return {
+            r["event_type"]: (r["n"], r["s"])
+            for r in spark.read.parquet(state).collect()
+        }
+
+    step([("view", 1, 2.0), ("view", 2, 3.0), ("click", 4, 1.0)], 0)
+    return state, second_step, {"view": (3, 10.0), "click": (1, 1.0)}
+
+
+@pytest.mark.parametrize(
+    "case", [_cron_upsert_case, _mv_merge_case], ids=["cmd_upsert", "mv_merge_batch"]
+)
+def test_swapped_table_callers_merge_into_recovered_table(spark, tmp_path, case):
+    """A crash between the swap's renames leaves only <path>.old; the
+    next step of every caller must merge into that table, not
+    bootstrap a new one from its own batch."""
+    import os
+
+    path, second_step, want = case(spark, tmp_path)
+    os.rename(path, path + ".old")
+    assert second_step() == want
     assert not os.path.exists(path + ".old")
 
 

@@ -410,6 +410,31 @@ def test_lineage_cuts_and_candidate_id_broadcast_have_one_home():
     assert id_broadcasts == 1
 
 
+def test_in_place_table_rewrites_have_one_home():
+    """Only io/sinks.py stages, swaps or repairs a table in place; the
+    modules that rewrite tables call its atomic_swap_parquet,
+    overwrite_partitions or read_swapped."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sftp_data_ingestion_spark"
+    files = [
+        *(root / "operators").rglob("*.py"),
+        root / "cli.py",
+        root / "streaming.py",
+        root / "io" / "compact.py",
+        root / "io" / "layout.py",
+    ]
+    banned = ("os.rename(", "shutil.move(", "tempfile.mkdtemp(",
+              "recover_interrupted_swap")
+    offenders = [
+        f"{f.relative_to(root)}: {b}"
+        for f in files
+        for b in banned
+        if b in f.read_text()
+    ]
+    assert offenders == []
+
+
 def test_salted_agg_two_stage_shape(spark):
     """Salted aggregation: first shuffle on (key, salt) — uniform —
     then a tiny shuffle on key; never a single hot-key reducer."""

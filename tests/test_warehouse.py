@@ -235,37 +235,6 @@ def test_jsonl_type_mismatch_is_corrupt_not_silent(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# small-file compaction
-# ---------------------------------------------------------------------------
-
-
-def test_compact_parquet_dir_merges_and_preserves_rows(spark, tmp_path):
-    from sftp_data_ingestion_spark.operators.compact import (
-        compact_parquet_dir,
-    )
-
-    path = str(tmp_path / "staging")
-    # 16 tiny appended files
-    for i in range(16):
-        spark.range(i * 10, (i + 1) * 10).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-    import os
-    n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert n_before >= 16
-    before = sorted(r["id"] for r in spark.read.parquet(path).collect())
-
-    m = compact_parquet_dir(spark, path, target_bytes=1 << 30)
-    assert m["compacted"] and m["files_after"] == 1
-    after = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    assert after == before == list(range(160))
-
-    # already compact -> no-op
-    m2 = compact_parquet_dir(spark, path, target_bytes=1 << 30)
-    assert not m2["compacted"]
-
-
-# ---------------------------------------------------------------------------
 # multi-batch streaming drain
 # ---------------------------------------------------------------------------
 
