@@ -9,7 +9,7 @@ them 5 minutes apart). One command per stage plus ``run-all``:
     python -m sftp_data_ingestion_spark run-all --source DIR --landing DIR --warehouse DIR
 
 Warehouse layout (all under --warehouse):
-    bronze/   all-string staging rows (S8)
+    bronze/   all-string staging rows (S8); absent after an archive
     dw/       typed fact table, one row per chave_nfe (U1)
     hist/     archived staging rows + lineage (A1/A2)
     ledger/   processed-file ledger (S10)
@@ -24,7 +24,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -63,14 +62,12 @@ def cmd_load(spark: SparkSession, args) -> dict:
 
 
 def cmd_upsert(spark: SparkSession, args) -> dict:
-    from pyspark.sql.utils import AnalysisException
-
+    from sftp_data_ingestion_spark.io.sinks import read_table
     from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
 
     p = _paths(args.warehouse)
-    try:
-        staging = spark.read.parquet(p["bronze"])
-    except AnalysisException:
+    staging = read_table(spark, p["bronze"])
+    if staging is None:
         return {"upserted": 0, "reason": "no bronze data"}
     if getattr(args, "buckets", None):
         return _upsert_bucketed(spark, p, staging, args.buckets)
@@ -116,20 +113,14 @@ def _upsert_bucketed(spark: SparkSession, p: dict, staging, buckets: int) -> dic
 
 
 def cmd_archive(spark: SparkSession, args) -> dict:
-    from pyspark.sql.utils import AnalysisException
-
     from sftp_data_ingestion_spark.operators.archive import move_to_archive
 
     p = _paths(args.warehouse)
-    try:
-        spark.read.parquet(p["bronze"])
-    except AnalysisException:
-        return {"moved": 0, "reason": "no bronze data"}
     return move_to_archive(
         spark,
         staging_path=p["bronze"],
         hist_path=p["hist"],
-        batch_id=args.batch_id or str(uuid.uuid4()),
+        batch_id=args.batch_id,
         lock_dir=args.warehouse,
     )
 

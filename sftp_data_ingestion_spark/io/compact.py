@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_swapped
+from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_table
 
 
 def _data_files(path: str) -> list[tuple[str, int]]:
@@ -50,7 +50,7 @@ def compact_parquet_dir(
     table is pure write amplification. Returns
     ``{files_before, files_after, bytes_total, compacted}``.
     """
-    df = read_swapped(spark, path)
+    df = read_table(spark, path)
     # a hive-partitioned layout (e.g. the bucketed DW's dw_bucket=N
     # dirs) must keep its directory structure: a flat rewrite would
     # fold the partition column into the data files and break every

@@ -56,11 +56,12 @@ _HEAD_BYTES = 256 * 1024
 _QUOTE_AWARE = '(?=(?:[^"]*"[^"]*")*[^"]*$)'
 
 
-def decode_head(path: str, n_bytes: int = _HEAD_BYTES) -> str:
+def decode_head(path: str, n_bytes: int = _HEAD_BYTES) -> tuple[str, str]:
     """Decode the file head exactly as the reference's encoding chain
     resolves: cp1252 with replacement (utf-8-sig BOM bytes survive
     cp1252 decoding as '﻿'-equivalent junk chars the header strip
-    removes — see _normalize_header in conform)."""
+    removes — see _normalize_header in conform). Returns ``(text,
+    encoding)``; the encoding is the one the body parse uses."""
     with open(path, "rb") as f:
         raw = f.read(n_bytes)
     if raw.startswith(codecs.BOM_UTF8):
@@ -68,10 +69,10 @@ def decode_head(path: str, n_bytes: int = _HEAD_BYTES) -> str:
         # accented headers round-trip (cp1252-decoding utf-8 bytes
         # would mangle "Inserção" -> header gate could still pass, but
         # parity of header TEXT matters for DE_PARA)
-        return raw[len(codecs.BOM_UTF8):].decode("utf-8", errors="replace")
+        return raw[len(codecs.BOM_UTF8):].decode("utf-8", errors="replace"), "utf-8"
     if _utf8_valid(raw, truncated=len(raw) == n_bytes):
-        return raw.decode("utf-8", errors="replace")
-    return raw.decode("cp1252", errors="replace")
+        return raw.decode("utf-8", errors="replace"), "utf-8"
+    return raw.decode("cp1252", errors="replace"), "cp1252"
 
 
 def _utf8_valid(raw: bytes, truncated: bool) -> bool:
@@ -136,12 +137,11 @@ class FilePlan:
 def plan_file(path: str) -> FilePlan:
     """Sniff + header-gate one file (head-only IO)."""
     try:
-        head = decode_head(path)
+        head, enc = decode_head(path)
     except OSError as exc:
         return FilePlan(path=path, valid=False, reason=f"io: {exc}")
     if not head.strip():
         return FilePlan(path=path, valid=False, reason="empty file")
-    enc = "utf-8" if _is_utf8ish(path) else "cp1252"
     sep = sniff_separator(head)
     header = parse_header(head, sep)
     first_line = next(
@@ -155,14 +155,6 @@ def plan_file(path: str) -> FilePlan:
             "header gate: <10 known columns",
         )
     return FilePlan(path, enc, sep, header, first_line, True, "")
-
-
-def _is_utf8ish(path: str) -> bool:
-    with open(path, "rb") as f:
-        raw = f.read(_HEAD_BYTES)
-    if raw.startswith(codecs.BOM_UTF8):
-        return True
-    return _utf8_valid(raw, truncated=len(raw) == _HEAD_BYTES)
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.io.sinks import read_table
 from sftp_data_ingestion_spark.rebalance import cut
 
 
@@ -35,14 +36,12 @@ def append_evolved(df: DataFrame, path: str) -> dict:
     additive-evolution policy. Returns a report dict
     ``{added, filled_null}`` of column names; raises ``ValueError``
     on a type conflict with the existing schema."""
-    spark = df.sparkSession
-    try:
-        existing = spark.read.parquet(path).schema
-    except Exception:
+    current = read_table(df.sparkSession, path)
+    if current is None:
         df.write.mode("append").parquet(path)
         return {"added": [f.name for f in df.schema], "filled_null": []}
     have = {f.name: f.dataType for f in df.schema}
-    old = {f.name: f.dataType for f in existing}
+    old = {f.name: f.dataType for f in current.schema}
     conflicts = [
         n for n in have.keys() & old.keys() if have[n] != old[n]
     ]

@@ -22,10 +22,10 @@ batch reader needs one scan per encoding group). Downstream, the
 same Column-level robust-CSV parse (`csv_robust.parse_lines`)
 applies unchanged.
 
-Detection mirrors `csv_robust.decode_head`/`_is_utf8ish` byte for
-byte: UTF-8 BOM wins, then strict-UTF-8 validity over the whole file
-(the head-sniff ambiguity disappears because the executor holds the
-full bytes), else Latin-1 (which never fails — every byte decodes).
+Detection mirrors `csv_robust.decode_head` byte for byte: UTF-8 BOM
+wins, then strict-UTF-8 validity over the whole file (the head-sniff
+ambiguity disappears because the executor holds the full bytes), else
+Latin-1 (which never fails — every byte decodes).
 """
 
 from __future__ import annotations

@@ -15,10 +15,11 @@ Reference (``/root/reference/python/02_load_stage_pedidos.py``):
 It is also the one home for rewriting a parquet table in place — the
 guarantee the reference gets from PostgreSQL transactions around
 stage 3 and 4: :func:`atomic_swap_parquet` for whole tables,
-:func:`overwrite_partitions` for a partition subset, and
-:func:`read_swapped` for reading a table the swap maintains. New files
-are always staged next to the table, never in the system temp dir, so
-every rename stays on one filesystem.
+:func:`overwrite_partitions` for a partition subset and
+:func:`drop_table` for clearing one. New files are always staged next
+to the table, never in the system temp dir, so every rename stays on
+one filesystem. :func:`read_table` is the one way to open a table that
+may not exist yet: absent and empty are the same state.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def append_bronze(df: DataFrame, bronze_path: str) -> None:
@@ -59,25 +61,41 @@ def route_file(path: str, ok: bool, lidos_dir: str, erros_dir: str) -> str:
 def _recover_interrupted_swap(path: str) -> None:
     """Repair the one non-atomic window of :func:`atomic_swap_parquet`:
     a crash between the two renames leaves ``<path>.old`` holding the
-    only copy while ``path`` is missing. Runs before every read of a
-    swapped table (:func:`read_swapped`) and before every swap, so no
-    caller mistakes the missing table for a first run and silently
-    rebuilds it from scratch, losing its history."""
+    only copy while ``path`` is missing. Runs before every table open
+    (:func:`read_table`) and before every swap, so no caller mistakes
+    the missing table for a first run and silently rebuilds it from
+    scratch, losing its history."""
     old = path + ".old"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
 
 
-def read_swapped(spark: SparkSession, path: str) -> DataFrame | None:
-    """Open a table that :func:`atomic_swap_parquet` rewrites: repair
-    an interrupted swap first, then return the table, or ``None`` when
-    it does not exist yet (the caller's first run). A plain exists
-    check, not a caught ``AnalysisException``: the failed read would
-    log a harmless but alarming stack trace on every first run."""
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """Open the parquet table dir at ``path`` (with ``schema`` if
+    given) after repairing an interrupted swap, or return ``None`` when
+    it is missing or every name in it starts with ``_`` or ``.`` — the
+    names Spark's listing skips, all an aborted first append leaves.
+    A table with data that cannot be read raises, never reads as new."""
     _recover_interrupted_swap(path)
-    if not os.path.exists(path):
+    if not os.path.exists(path) or all(
+        n.startswith(("_", ".")) for n in os.listdir(path)
+    ):
         return None
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def drop_table(path: str) -> None:
+    """Delete the table at ``path``: rename it to ``<path>.dropped``,
+    then remove that, so a crash leaves the table whole or absent,
+    never half-deleted. Not ``<path>.old``: :func:`read_table`'s swap
+    repair would rename that back and resurrect the dropped rows."""
+    dropped = path + ".dropped"
+    shutil.rmtree(dropped, ignore_errors=True)
+    os.rename(path, dropped)
+    shutil.rmtree(dropped)
 
 
 def atomic_swap_parquet(df: DataFrame, path: str) -> int:
@@ -90,7 +108,7 @@ def atomic_swap_parquet(df: DataFrame, path: str) -> int:
     Both scratch dirs are siblings of ``path``, so the renames stay on
     one filesystem. The swap is two renames, so there IS a crash
     window between them where ``path`` is absent and ``<path>.old``
-    holds the data; :func:`read_swapped` repairs it before handing
+    holds the data; :func:`read_table` repairs it before handing
     out the table, and so does this function before it writes. Stale
     ``.tmp``/``.old`` leftovers from a crashed earlier run are cleared
     up front so a retry never fails the rename into a non-empty

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sftp_data_ingestion_spark.schemas import empty_frame
+from sftp_data_ingestion_spark.io.sinks import read_table
 
 LEDGER_SCHEMA = T.StructType(
     [
@@ -76,23 +76,20 @@ def clean_partials(landing_dir: str) -> int:
 # ---------------------------------------------------------------------------
 
 
-def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
-    """Ledger table (empty frame when it doesn't exist yet)."""
-    try:
-        return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
-    except Exception:  # noqa: BLE001 — first run: no ledger yet
-        return empty_frame(spark, LEDGER_SCHEMA)
+def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame | None:
+    """Ledger table, or ``None`` before the first load."""
+    return read_table(spark, ledger_path, LEDGER_SCHEMA)
 
 
 def new_files(
-    spark: SparkSession, listing: list[str], ledger: DataFrame
+    spark: SparkSession, listing: list[str], ledger: DataFrame | None
 ) -> list[str]:
     """S3/S10: set difference of the listing against processed
     basenames (lowercased, as the reference compares). The ledger side
     is one collected column; the listing never leaves the driver.
     Returns full paths in deterministic order."""
-    if not listing:
-        return []
+    if not listing or ledger is None:  # no ledger yet: all files new
+        return sorted(listing)
     seen = {r[0] for r in ledger.select(F.lower("filename")).collect()}
     return sorted(p for p in listing if os.path.basename(p).lower() not in seen)
 

@@ -7,7 +7,8 @@ bulk operations — no batching needed (SURVEY.md §2.10):
 
 1. append staging rows to hist, stamped ``processed_ts = now()`` and
    ``batch_id = uuid`` (A2);
-2. only then clear staging (overwrite with an empty frame).
+2. only then clear staging by dropping it (``io/sinks.drop_table``):
+   no staging table until the next load, so an idle run does no work.
 
 Ordering gives at-least-once semantics, matching the reference's
 per-batch transactionality; on a real deployment both tables are Delta
@@ -24,7 +25,7 @@ import uuid
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from sftp_data_ingestion_spark.schemas import empty_frame
+from sftp_data_ingestion_spark.io.sinks import drop_table, read_table
 
 
 def _batch_already_archived(
@@ -32,12 +33,10 @@ def _batch_already_archived(
 ) -> bool:
     """Pushed-down point lookup on the lineage column (column-pruned;
     with hist partitioned by batch_id this is partition pruning)."""
-    try:
-        hist = spark.read.parquet(hist_path)
-    except Exception:  # noqa: BLE001 — first archive: no hist yet
-        return False
+    hist = read_table(spark, hist_path)
     return (
-        hist.where(F.col("batch_id") == batch_id).limit(1).count() > 0
+        hist is not None
+        and hist.where(F.col("batch_id") == batch_id).limit(1).count() > 0
     )
 
 
@@ -90,7 +89,9 @@ def move_to_archive(
                 raise RuntimeError(
                     "archive already running (advisory lock held)"
                 )
-        staging = spark.read.parquet(staging_path)
+        staging = read_table(spark, staging_path)
+        if staging is None:
+            return {"moved": 0, "batch_id_rows": 0}
         bid = batch_id or str(uuid.uuid4())
         # Idempotency gate: a crash after the hist append but before
         # the staging truncate leaves the batch already archived; a
@@ -120,8 +121,7 @@ def move_to_archive(
                     f"but staging holds different content ({stg_n} rows); "
                     "batch_id must be unique per batch"
                 )
-            empty = empty_frame(spark, staging.schema)
-            empty.write.mode("overwrite").parquet(staging_path)
+            drop_table(staging_path)
             return {"moved": 0, "batch_id_rows": 0}
         obs = Observation("archive_counts")
         stamped = (
@@ -132,8 +132,7 @@ def move_to_archive(
         stamped.write.mode("append").parquet(hist_path)
         n = int(obs.get["rows"])
         # clear staging only after hist append landed (at-least-once)
-        empty = empty_frame(spark, staging.schema)
-        empty.write.mode("overwrite").parquet(staging_path)
+        drop_table(staging_path)
         return {"moved": n, "batch_id_rows": n}
     finally:
         if acquired and lock_path and os.path.exists(lock_path):

@@ -21,7 +21,7 @@ from functools import partial
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_swapped
+from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_table
 from sftp_data_ingestion_spark.operators.clean import clean_staging
 from sftp_data_ingestion_spark.operators.dedup import dedup_latest_pedidos
 from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
@@ -87,7 +87,7 @@ def upsert_and_swap(staging: DataFrame, path: str) -> int:
     there; returns the new DW row count. The first run (no DW yet) merges
     into an empty typed DW. Both merge joins read the delta, with
     different column sets, so it is persisted until the swap is done."""
-    dw = read_swapped(staging.sparkSession, path)
+    dw = read_table(staging.sparkSession, path)
     if dw is None:
         dw = clean_staging(staging).limit(0)
     delta = staging_to_delta(staging).persist()

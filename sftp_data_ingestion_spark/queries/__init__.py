@@ -147,12 +147,14 @@ def _family_rank(name: str) -> int:
 # they can be unpinned (the artifact scan handles the rotation again).
 # Every query an optimization round rewrites MUST be added here.
 REGRADE_FIRST: tuple[str, ...] = (
-    # in-place table rewrites: the bucketed upsert now commits through
-    # io/sinks.overwrite_partitions, and the MV state merge reads its
-    # table through io/sinks.read_swapped
+    # in-place table rewrites: the bucketed upsert commits through
+    # io/sinks.overwrite_partitions; the MV merge and the near-dup
+    # stream ingests open their tables through io/sinks.read_table
     "u1_upsert_partitioned",
     "z_stream_mv_merge",
     "st_stream_cms_topk",
+    "z3_stream_ingest_neardup",
+    "st_stream_ingest_stateful",
     # near-dup, curation and connected-components consumers: their
     # candidate-verify tail (ext/dedup.verify_candidates) or their
     # lineage cuts (rebalance.cut) were rewritten since they were last

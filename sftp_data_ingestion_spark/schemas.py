@@ -16,17 +16,7 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """Zero-row, all-nullable frame of ``schema`` built in the JVM
-    (``createDataFrame([])`` starts Python workers)."""
-    return spark.range(0).select(
-        [F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
-    )
 
 
 # ---------------------------------------------------------------------------

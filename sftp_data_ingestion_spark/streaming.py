@@ -21,12 +21,12 @@ pyspark ships without the state-server protocol dependency.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_table
 from sftp_data_ingestion_spark.schemas import STG_PEDIDOS
 
 
@@ -367,17 +367,13 @@ def mv_merge_batch(
     """One MV merge step (the foreachBatch body of
     :func:`stream_mv_merge`, separated so the replay guard is unit-
     testable). Returns False when the batch was a replay no-op."""
-    from sftp_data_ingestion_spark.io.sinks import (
-        atomic_swap_parquet,
-        read_swapped,
-    )
     from sftp_data_ingestion_spark.operators.mv import (
         aggregate_batch,
         merge_mv_state,
     )
 
     partial = aggregate_batch(batch_df, keys, specs)
-    state = read_swapped(batch_df.sparkSession, state_path)
+    state = read_table(batch_df.sparkSession, state_path)
     if state is not None:
         last = state.select(F.max("_mv_batch_id")).first()[0]
         if last is not None and last >= batch_id:
@@ -440,17 +436,10 @@ def stream_ingest_neardup(
     )
 
     def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        try:
-            corpus = s.read.parquet(corpus_path)
-        except AnalysisException as e:
-            # Only a genuinely-absent corpus is a cold start. A corpus
-            # that EXISTS but fails analysis (non-parquet garbage,
-            # mixed files) must re-raise — seeding next to existing
-            # data would bypass both dedup and the replay guard.
-            cold = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-            if (e.getCondition() or "") not in cold:
-                raise
+        # unreadable corpus data raises: seeding next to it would
+        # bypass both dedup and the replay guard
+        corpus = read_table(batch_df.sparkSession, corpus_path)
+        if corpus is None:
             # cold start: no corpus yet — nothing to dedup against,
             # admit the whole batch (it seeds the corpus)
             (
@@ -668,20 +657,11 @@ def stream_ingest_neardup_stateful(
     )
 
     def release(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        try:
-            replayed = (
-                s.read.parquet(corpus_path)
-                .where(F.col("batch_seq") == batch_id)
-                .limit(1)
-                .count()
-            )
-        except AnalysisException as e:
-            cold = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-            if (e.getCondition() or "") not in cold:
-                raise
-            replayed = 0
-        if replayed:
+        corpus = read_table(batch_df.sparkSession, corpus_path)
+        if (
+            corpus is not None
+            and corpus.where(F.col("batch_seq") == batch_id).limit(1).count()
+        ):
             return  # replayed batch: already admitted
         per_doc = batch_df.groupBy("doc_id").agg(
             F.max("dup").alias("dup"),  # dup in ANY bucket

@@ -9,7 +9,9 @@ import shutil
 import subprocess
 import sys
 from decimal import Decimal
+from types import SimpleNamespace
 
+from sftp_data_ingestion_spark import cli
 from sftp_data_ingestion_spark.cli import main
 
 HDR = ("ID;Data Inserção;Pedido;Data Nfe;Valor Nfe;Peso;Qtd. Volumes;UF;"
@@ -61,9 +63,8 @@ def test_four_stage_golden_run(spark, tmp_path):
     assert rows[K2]["uf"] == "RJ"
 
     hist = spark.read.parquet(str(tmp_path / "wh" / "hist"))
-    assert hist.count() == 4                  # ALL rows archived (P4:
-    assert spark.read.parquet(               # bad keys reach hist)
-        str(tmp_path / "wh" / "bronze")).count() == 0
+    assert hist.count() == 4  # ALL rows archived (P4: bad keys reach hist)
+    assert not (tmp_path / "wh" / "bronze").exists()  # staging dropped
 
     # full-pipeline idempotency: rerun with no new remote files
     # (materialize BEFORE the rerun — the upsert swap replaces the
@@ -134,8 +135,9 @@ print(json.dumps(out))
 
 def test_cron_load_and_archive_start_no_python_worker(tmp_path):
     """A cold cron run of the load and archive stages plans every step
-    in the JVM: listing vs ledger, ledger append, empty-staging write.
-    A Python worker would cost the daemon start-up in every cron run."""
+    in the JVM: listing vs ledger, ledger append, hist append. A Python
+    worker would cost the daemon start-up in every cron run. Opening
+    the not-yet-created ledger and hist logs no stack trace."""
     landing = tmp_path / "novos"
     shutil.copytree(_setup_remote(tmp_path), landing)
     (landing / "alien.csv").write_text("a;b\n1;2\n")  # fails the header gate
@@ -151,6 +153,35 @@ def test_cron_load_and_archive_start_no_python_worker(tmp_path):
     assert out["load"]["rows_loaded"] == 4
     assert out["archive"]["moved"] == 4
     assert out["python_workers"] == []
+    assert "FileNotFoundException" not in res.stderr
+
+
+def test_idle_cycle_starts_no_spark_job(spark, tmp_path):
+    """A cron cycle with no new remote files has nothing to do: its
+    upsert and archive start no Spark job, and the DW and hist keep
+    their files."""
+    remote = _setup_remote(tmp_path)
+    wh = tmp_path / "wh"
+    args = SimpleNamespace(source=str(remote), landing=str(tmp_path / "novos"),
+                           warehouse=str(wh), batch_id=None, buckets=None)
+    assert main(["run-all", "--source", args.source, "--landing", args.landing,
+                 "--warehouse", args.warehouse]) == 0
+    dw_files = sorted(os.listdir(wh / "dw"))
+    n_hist = len(os.listdir(wh / "hist"))
+    sc = spark.sparkContext
+    jobs = {}
+    for stage in ("ingest", "load", "upsert", "archive"):
+        group = f"idle-cycle-{stage}"
+        sc.setJobGroup(group, stage)
+        try:
+            getattr(cli, f"cmd_{stage}")(spark, args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[stage] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert (jobs["upsert"], jobs["archive"]) == (0, 0)
+    assert sorted(os.listdir(wh / "dw")) == dw_files
+    assert len(os.listdir(wh / "hist")) == n_hist
+    assert not (wh / "bronze").exists()
 
 
 def test_upsert_without_bronze_is_noop(tmp_path):

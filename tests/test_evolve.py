@@ -52,3 +52,15 @@ def test_read_ignoring_corrupt_survives_bad_file(spark, tmp_path):
     assert read_ignoring_corrupt(spark, path).count() == 10
     # and the conf was restored
     assert spark.conf.get("spark.sql.files.ignoreCorruptFiles") == "false"
+
+
+def test_append_onto_unreadable_table_raises(spark, tmp_path):
+    """A table that holds a data file Spark cannot read is not a first
+    run: the append raises and lands nothing next to the junk."""
+    path = tmp_path / "t"
+    path.mkdir()
+    (path / "part-x.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception):
+        append_evolved(spark.createDataFrame([(1, "a")], "id long, v string"),
+                       str(path))
+    assert os.listdir(path) == ["part-x.parquet"]

@@ -2,6 +2,7 @@
 archive (A1/A2), full-pipeline idempotency (SURVEY.md §5.2)."""
 
 import datetime as dt
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -222,7 +223,7 @@ def test_move_to_archive(spark, tmp_path):
     cols = set(hist_df.columns)
     assert {"processed_ts", "batch_id"} <= cols
     assert hist_df.select("batch_id").distinct().collect()[0][0] == "batch-1"
-    assert spark.read.parquet(staging).count() == 0  # staging cleared
+    assert not os.path.exists(staging)  # staging dropped
     # second run is a no-op append
     res2 = move_to_archive(spark, staging, hist, batch_id="batch-2",
                            lock_dir=str(tmp_path))
@@ -348,13 +349,27 @@ def test_archive_rerun_same_batch_id_is_idempotent(spark, tmp_path):
     res2 = move_to_archive(spark, staging, hist, batch_id="B1")
     assert res2["moved"] == 0                       # gate fired
     assert spark.read.parquet(hist).count() == 2    # no duplicates
-    assert spark.read.parquet(staging).count() == 0  # staging cleared
+    assert not os.path.exists(staging)               # staging dropped
     # a NEW batch id archives normally
     spark.createDataFrame([("c",)], "v string").write.mode(
         "overwrite").parquet(staging)
     res3 = move_to_archive(spark, staging, hist, batch_id="B2")
     assert res3["moved"] == 1
     assert spark.read.parquet(hist).count() == 3
+
+
+def test_archive_gate_over_unreadable_hist_raises(spark, tmp_path):
+    """A hist that exists but cannot be read is not a first archive:
+    the idempotency gate raises and staging keeps its rows."""
+    staging = str(tmp_path / "staging")
+    hist = tmp_path / "hist"
+    spark.createDataFrame([("a",), ("b",)], "v string").write.parquet(staging)
+    hist.mkdir()
+    (hist / "part-x.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception):
+        move_to_archive(spark, staging, str(hist), batch_id="B1")
+    assert spark.read.parquet(staging).count() == 2
+    assert os.listdir(hist) == ["part-x.parquet"]
 
 
 def test_archive_batch_id_reuse_with_new_data_raises(spark, tmp_path):
@@ -385,20 +400,21 @@ def test_archive_batch_id_reuse_with_new_data_raises(spark, tmp_path):
 
 def test_atomic_swap_crash_window_recovery(spark, tmp_path):
     """A crash between the swap's two renames leaves only <path>.old;
-    read_swapped must restore it BEFORE any caller treats the missing
-    table as 'first run' (silent full-history loss)."""
-    import os
-
+    read_table must restore it BEFORE any caller treats the missing
+    table as 'first run' (silent full-history loss). A table with no
+    data file reads as None; one with unreadable data raises; a
+    dropped table stays dropped."""
     from sftp_data_ingestion_spark.io.sinks import (
         atomic_swap_parquet,
-        read_swapped,
+        drop_table,
+        read_table,
     )
 
     path = str(tmp_path / "dw")
     spark.createDataFrame([("k1",), ("k2",)], "k string").write.parquet(path)
     # simulate the crash window: table renamed aside, swap never landed
     os.rename(path, path + ".old")
-    recovered = read_swapped(spark, path)
+    recovered = read_table(spark, path)
     assert recovered is not None
     assert sorted(r["k"] for r in recovered.collect()) == ["k1", "k2"]
     assert not os.path.exists(path + ".old")
@@ -410,7 +426,24 @@ def test_atomic_swap_crash_window_recovery(spark, tmp_path):
     assert n == 1
     assert [r["k"] for r in spark.read.parquet(path).collect()] == ["k3"]
     assert not os.path.exists(path + ".old")
-    assert read_swapped(spark, str(tmp_path / "absent")) is None
+    assert read_table(spark, str(tmp_path / "absent")) is None
+    # what an aborted first append leaves: only names Spark skips
+    aborted = tmp_path / "aborted"
+    (aborted / "_temporary").mkdir(parents=True)
+    (aborted / "_SUCCESS").touch()
+    (aborted / ".part-0.parquet.crc").touch()
+    assert read_table(spark, str(aborted)) is None
+    junk = tmp_path / "junk"
+    junk.mkdir()
+    (junk / "part-x.parquet").write_bytes(b"this is not parquet")
+    with pytest.raises(Exception):
+        read_table(spark, str(junk))
+    # a drop interrupted after its rename is never repaired back
+    drop_table(path)
+    assert not os.path.exists(path) and not os.path.exists(path + ".dropped")
+    spark.createDataFrame([("k4",)], "k string").write.parquet(path + ".dropped")
+    assert read_table(spark, path) is None
+    assert not os.path.exists(path)
 
 
 def _cron_upsert_case(spark, tmp_path):

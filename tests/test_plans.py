@@ -413,7 +413,7 @@ def test_lineage_cuts_and_candidate_id_broadcast_have_one_home():
 def test_in_place_table_rewrites_have_one_home():
     """Only io/sinks.py stages, swaps or repairs a table in place; the
     modules that rewrite tables call its atomic_swap_parquet,
-    overwrite_partitions or read_swapped."""
+    overwrite_partitions, drop_table or read_table."""
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parents[1] / "sftp_data_ingestion_spark"
@@ -432,6 +432,36 @@ def test_in_place_table_rewrites_have_one_home():
         for b in banned
         if b in f.read_text()
     ]
+    assert offenders == []
+
+
+def test_missing_tables_have_one_open_policy():
+    """io/sinks.read_table is the one place that maps a missing table
+    to a first run: no caller catches a failed read as "absent", and
+    no caller builds an empty frame to stand for a missing table."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sftp_data_ingestion_spark"
+    banned = {
+        "**/*.py": ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA", "empty_frame("),
+        "cli.py": ("except AnalysisException",),
+        "streaming.py": ("except AnalysisException",),
+        "operators/archive.py": ("except Exception",),
+        "io/evolve.py": ("except Exception",),
+    }
+    offenders = [
+        f"{f.relative_to(root)}: {b}"
+        for pattern, bs in banned.items()
+        for f in root.glob(pattern)
+        for b in bs
+        if b in f.read_text()
+    ]
+    # io/sources.py keeps its SFTP transport's broad catches (connect
+    # cleanup, fetch retry), so there the check is on the ledger open
+    sources = (root / "io" / "sources.py").read_text()
+    ledger = sources[sources.index("def read_ledger"):sources.index("def record_results")]
+    if "except" in ledger:
+        offenders.append("io/sources.py: except in the ledger open")
     assert offenders == []
 
 
