@@ -4,7 +4,7 @@ them 5 minutes apart). One command per stage plus ``run-all``:
 
     python -m sftp_data_ingestion_spark ingest  --source DIR --landing DIR
     python -m sftp_data_ingestion_spark load    --landing DIR --warehouse DIR
-    python -m sftp_data_ingestion_spark upsert  --warehouse DIR
+    python -m sftp_data_ingestion_spark upsert  --warehouse DIR [--buckets N]
     python -m sftp_data_ingestion_spark archive --warehouse DIR
     python -m sftp_data_ingestion_spark run-all --source DIR --landing DIR --warehouse DIR
 
@@ -15,8 +15,10 @@ Warehouse layout (all under --warehouse):
     ledger/   processed-file ledger (S10)
     lidos/ erros/   routed file copies (S9)
 
-The DW rewrite is crash-safe via write-to-temp + directory swap; the
-archive is idempotent per batch_id (see operators/archive.py).
+``--buckets N`` lays out a new DW in N hash buckets; an existing DW
+keeps its layout, and ``upsert``/``run-all`` merge in it. A plain DW's
+rewrite is crash-safe via write-to-temp + directory swap; the archive
+is idempotent per batch_id (see operators/archive.py).
 """
 
 from __future__ import annotations
@@ -63,53 +65,13 @@ def cmd_load(spark: SparkSession, args) -> dict:
 
 def cmd_upsert(spark: SparkSession, args) -> dict:
     from sftp_data_ingestion_spark.io.sinks import read_table
-    from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
+    from sftp_data_ingestion_spark.operators.pipeline import upsert_dw
 
     p = _paths(args.warehouse)
     staging = read_table(spark, p["bronze"])
     if staging is None:
         return {"upserted": 0, "reason": "no bronze data"}
-    if getattr(args, "buckets", None):
-        return _upsert_bucketed(spark, p, staging, args.buckets)
-    return {"dw_rows": upsert_and_swap(staging, p["dw"])}
-
-
-def _upsert_bucketed(spark: SparkSession, p: dict, staging, buckets: int) -> dict:
-    """--buckets N: the partition-pruned scale path. First run lays the
-    DW out hash-bucketed; later runs rewrite only the buckets the batch
-    touches (O(affected buckets), not O(DW))."""
-    from sftp_data_ingestion_spark.operators.pipeline import staging_to_delta
-    from sftp_data_ingestion_spark.operators.upsert_partitioned import (
-        BUCKET_COL,
-        upsert_partitioned,
-        write_dw_partitioned,
-    )
-    from sftp_data_ingestion_spark.schemas import NEWER_WINS_COLS, SET_ONCE_COLS
-
-    delta = staging_to_delta(staging)
-    if not os.path.exists(p["dw"]):
-        write_dw_partitioned(
-            delta, p["dw"], key="chave_nfe", num_buckets=buckets
-        )
-        return {"dw_rows": spark.read.parquet(p["dw"]).count(),
-                "bootstrap": True, "buckets": buckets}
-    if not any(
-        e.startswith(f"{BUCKET_COL}=") for e in os.listdir(p["dw"])
-    ):
-        return {"error": f"{p['dw']} is not a bucketed layout; "
-                         "run without --buckets or migrate first"}
-    metrics = upsert_partitioned(
-        spark,
-        p["dw"],
-        delta,
-        key="chave_nfe",
-        newer_col="data_ultima_ocr",
-        newer_wins_cols=NEWER_WINS_COLS,
-        greatest_cols=("data_insercao",),
-        set_once_cols=SET_ONCE_COLS,
-        num_buckets=buckets,
-    )
-    return {"buckets": buckets, **metrics}
+    return upsert_dw(staging, p["dw"], getattr(args, "buckets", None))
 
 
 def cmd_archive(spark: SparkSession, args) -> dict:
@@ -244,8 +206,8 @@ def main(argv: list[str] | None = None) -> int:
     common(pu, warehouse=True)
     pu.add_argument(
         "--buckets", type=int, default=None,
-        help="use the hash-bucketed DW layout with N buckets "
-             "(partition-pruned merges)",
+        help="lays out a new DW in N hash buckets (partition-pruned "
+             "merges); an existing DW keeps its layout",
     )
     pa = sub.add_parser("archive")
     common(pa, warehouse=True)
@@ -281,29 +243,10 @@ def main(argv: list[str] | None = None) -> int:
 
     args = ap.parse_args(argv)
     spark = get_spark(app_name=f"pipeline-{args.cmd}")
-    if args.cmd == "ingest":
-        out = {"ingest": cmd_ingest(spark, args)}
-    elif args.cmd == "load":
-        out = {"load": cmd_load(spark, args)}
-    elif args.cmd == "upsert":
-        out = {"upsert": cmd_upsert(spark, args)}
-    elif args.cmd == "archive":
-        out = {"archive": cmd_archive(spark, args)}
-    elif args.cmd == "compact":
-        out = {"compact": cmd_compact(spark, args)}
-    elif args.cmd == "curate":
-        out = {"curate": cmd_curate(spark, args)}
-    elif args.cmd == "scrub":
-        out = {"scrub": cmd_scrub(spark, args)}
-    elif args.cmd == "skew":
-        out = {"skew": cmd_skew(spark, args)}
-    else:  # run-all: the four stages in cron order, one process
-        out = {
-            "ingest": cmd_ingest(spark, args),
-            "load": cmd_load(spark, args),
-            "upsert": cmd_upsert(spark, args),
-            "archive": cmd_archive(spark, args),
-        }
+    # run-all: the four stages in cron order, one process
+    stages = (("ingest", "load", "upsert", "archive") if args.cmd == "run-all"
+              else (args.cmd,))
+    out = {s: globals()[f"cmd_{s}"](spark, args) for s in stages}
     print(json.dumps(out, default=str))
     return 0
 

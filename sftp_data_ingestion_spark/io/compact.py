@@ -51,7 +51,7 @@ def compact_parquet_dir(
     ``{files_before, files_after, bytes_total, compacted}``.
     """
     df = read_table(spark, path)
-    # a hive-partitioned layout (e.g. the bucketed DW's dw_bucket=N
+    # a hive-partitioned layout (e.g. the bucketed DW's per-bucket
     # dirs) must keep its directory structure: a flat rewrite would
     # fold the partition column into the data files and break every
     # partition-pruned reader. Compact those per-partition instead.

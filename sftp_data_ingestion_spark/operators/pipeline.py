@@ -25,6 +25,11 @@ from sftp_data_ingestion_spark.io.sinks import atomic_swap_parquet, read_table
 from sftp_data_ingestion_spark.operators.clean import clean_staging
 from sftp_data_ingestion_spark.operators.dedup import dedup_latest_pedidos
 from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
+from sftp_data_ingestion_spark.operators.upsert_partitioned import (
+    bucket_layout,
+    upsert_partitioned,
+    write_dw_partitioned,
+)
 from sftp_data_ingestion_spark.schemas import NEWER_WINS_COLS, SET_ONCE_COLS
 
 
@@ -82,16 +87,31 @@ def run_upsert_pipeline(
     return _upsert_pedidos(dw, staging_to_delta(staging, default_insercao))
 
 
-def upsert_and_swap(staging: DataFrame, path: str) -> int:
-    """:func:`run_upsert_pipeline` against the DW at ``path``, swapped in
-    there; returns the new DW row count. The first run (no DW yet) merges
-    into an empty typed DW. Both merge joins read the delta, with
+def upsert_dw(staging: DataFrame, path: str, buckets: int | None = None) -> dict:
+    """Stage 3 into the DW at ``path``. ``buckets`` lays out a new DW in
+    that many hash buckets; an existing DW keeps its layout (a differing
+    ``buckets`` raises before any write) and picks the commit: a
+    bucketed DW rewrites only the touched buckets, a plain one is
+    swapped in whole. Both merge joins of the swap read the delta, with
     different column sets, so it is persisted until the swap is done."""
     dw = read_table(staging.sparkSession, path)
+    delta = staging_to_delta(staging)
     if dw is None:
+        if buckets is not None:
+            n = write_dw_partitioned(delta, path, "chave_nfe", buckets)
+            return {"dw_rows": n, "bootstrap": True, "buckets": buckets}
         dw = clean_staging(staging).limit(0)
-    delta = staging_to_delta(staging).persist()
+    else:
+        layout = bucket_layout(path)
+        num_buckets = layout[1] if layout else None
+        if buckets is not None and buckets != num_buckets:
+            raise ValueError(f"{path} is laid out in {num_buckets or 'no'} "
+                             f"buckets, not {buckets}")
+        if layout:
+            return {"buckets": num_buckets,
+                    **upsert_partitioned(path, delta, _upsert_pedidos)}
+    delta = delta.persist()
     try:
-        return atomic_swap_parquet(_upsert_pedidos(dw, delta), path)
+        return {"dw_rows": atomic_swap_parquet(_upsert_pedidos(dw, delta), path)}
     finally:
         delta.unpersist()

@@ -11,13 +11,15 @@ O(affected buckets):
    pmod(xxhash64(key), num_buckets)``. The bucket is a pure function
    of the merge key, so every key lives in exactly one partition
    directory and bucket counts are balanced by the hash regardless of
-   key skew.
+   key skew. Both are recorded once, in ``<dw>/_buckets``, and every
+   merge reads them there.
 2. **Prune**: the delta's affected buckets (≤ ``num_buckets`` values,
    a driver-safe bounded collect) become a partition-filter on the DW
    scan — Spark reads only those directories (``PartitionFilters`` in
    the scan node), never the other 99.9% of the table.
-3. **Merge**: the same three-policy ``upsert_newer_wins`` expression
-   set over the pruned subset. Bucket residency never changes on
+3. **Merge**: the caller's whole-table merge policy (stage 3's is
+   ``pipeline._upsert_pedidos``) over the pruned subset. Bucket
+   residency never changes on
    update (hash of an unchanged key), so the merged output holds
    exactly the affected buckets, complete.
 4. **Commit**: the merged buckets go through
@@ -41,15 +43,17 @@ PostgreSQL's btree index plays that role.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import json
+import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sftp_data_ingestion_spark.io.sinks import overwrite_partitions
-from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
 
 BUCKET_COL = "dw_bucket"
+_LAYOUT = "_buckets"  # the layout record; Spark's listing skips "_" names
 
 
 def bucket_of(key_col: str, num_buckets: int):
@@ -59,15 +63,38 @@ def bucket_of(key_col: str, num_buckets: int):
 
 def write_dw_partitioned(
     dw: DataFrame, path: str, key: str = "chave_nfe", num_buckets: int = 64
-) -> None:
-    """Materialize the DW in the hash-bucketed layout (one-time)."""
+) -> int:
+    """Materialize the DW in the hash-bucketed layout (one-time), record
+    ``{"key", "num_buckets"}`` in ``<path>/_buckets``; returns the rows
+    written."""
+    if num_buckets < 1:
+        raise ValueError(f"num_buckets must be >= 1, got {num_buckets}")
+    obs = Observation()
     (
-        dw.withColumn(BUCKET_COL, bucket_of(key, num_buckets))
+        dw.observe(obs, F.count(F.lit(1)).alias("n"))
+        .withColumn(BUCKET_COL, bucket_of(key, num_buckets))
         .repartition(BUCKET_COL)  # one writer wave per bucket, no tiny files
         .write.mode("overwrite")
         .partitionBy(BUCKET_COL)
         .parquet(path)
     )
+    with open(os.path.join(path, _LAYOUT), "w") as f:
+        json.dump({"key": key, "num_buckets": num_buckets}, f)
+    return obs.get["n"]
+
+
+def bucket_layout(path: str) -> tuple[str, int] | None:
+    """``(key, num_buckets)`` from the DW's layout record, or ``None``
+    for a DW without bucket dirs. Bucket dirs without a record raise:
+    a guessed bucket count could put a key in two buckets."""
+    record = os.path.join(path, _LAYOUT)
+    if os.path.exists(record):
+        with open(record) as f:
+            layout = json.load(f)
+        return layout["key"], layout["num_buckets"]
+    if any(n.startswith(f"{BUCKET_COL}=") for n in os.listdir(path)):
+        raise ValueError(f"{path} has bucket dirs but no {_LAYOUT} record")
+    return None
 
 
 def read_dw(spark: SparkSession, path: str) -> DataFrame:
@@ -76,23 +103,24 @@ def read_dw(spark: SparkSession, path: str) -> DataFrame:
 
 
 def upsert_partitioned(
-    spark: SparkSession,
     dw_path: str,
     delta: DataFrame,
-    key: str = "chave_nfe",
-    newer_col: str = "data_ultima_ocr",
-    newer_wins_cols: Sequence[str] = (),
-    greatest_cols: Sequence[str] = (),
-    set_once_cols: Sequence[str] = (),
-    num_buckets: int = 64,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
 ) -> dict:
     """Merge ``delta`` into the bucketed DW at ``dw_path``, touching
     only the buckets the delta's keys hash into.
 
-    Returns run metrics ``{"buckets_touched", "buckets_total",
-    "rows_written"}``. The DW at ``dw_path`` must have been written by
-    :func:`write_dw_partitioned` with the same ``key``/``num_buckets``.
+    The key and bucket count come from the DW's layout record.
+    ``merge(dw_subset, delta)`` is the whole-table merge policy, e.g. a
+    ``partial`` of ``upsert_newer_wins``; it must match rows on the
+    record's key. Returns run metrics ``{"buckets_touched",
+    "buckets_total", "rows_written"}``.
     """
+    layout = bucket_layout(dw_path)
+    if layout is None:
+        raise ValueError(f"{dw_path} is not a bucketed layout")
+    key, num_buckets = layout
+    spark = delta.sparkSession
     delta = delta.where(F.col(key).isNotNull()).withColumn(
         BUCKET_COL, bucket_of(key, num_buckets)
     )
@@ -113,15 +141,9 @@ def upsert_partitioned(
         .where(F.col(BUCKET_COL).isin(touched))
         .drop(BUCKET_COL)
     )
-    merged = upsert_newer_wins(
-        dw_sub,
-        delta.drop(BUCKET_COL),
-        key=key,
-        newer_col=newer_col,
-        newer_wins_cols=newer_wins_cols,
-        greatest_cols=greatest_cols,
-        set_once_cols=set_once_cols,
-    ).withColumn(BUCKET_COL, bucket_of(key, num_buckets))
+    merged = merge(dw_sub, delta.drop(BUCKET_COL)).withColumn(
+        BUCKET_COL, bucket_of(key, num_buckets)
+    )
 
     # the pruned read above and this write share dw_path: the dynamic
     # overwrite replaces the touched buckets only at job commit, after

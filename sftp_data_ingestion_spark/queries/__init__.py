@@ -148,7 +148,8 @@ def _family_rank(name: str) -> int:
 # Every query an optimization round rewrites MUST be added here.
 REGRADE_FIRST: tuple[str, ...] = (
     # in-place table rewrites: the bucketed upsert commits through
-    # io/sinks.overwrite_partitions; the MV merge and the near-dup
+    # io/sinks.overwrite_partitions and reads its bucket count from the
+    # DW's layout record; the MV merge and the near-dup
     # stream ingests open their tables through io/sinks.read_table
     "u1_upsert_partitioned",
     "z_stream_mv_merge",

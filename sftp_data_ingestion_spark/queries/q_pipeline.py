@@ -164,7 +164,9 @@ def u1_upsert_partitioned(spark, sf_dir):
     the table back. Exercises write -> prune -> merge -> swap for real
     under the correctness gate."""
     import tempfile
+    from functools import partial
 
+    from sftp_data_ingestion_spark.operators.merge import upsert_newer_wins
     from sftp_data_ingestion_spark.operators.upsert_partitioned import (
         read_dw,
         upsert_partitioned,
@@ -174,16 +176,14 @@ def u1_upsert_partitioned(spark, sf_dir):
     dw, delta = _u1_inputs(spark, sf_dir)
     dw_path = tempfile.mkdtemp(prefix="u1_part_") + "/dw"
     write_dw_partitioned(dw, dw_path, key="k", num_buckets=16)
-    upsert_partitioned(
-        spark,
-        dw_path,
-        delta,
+    merge = partial(
+        upsert_newer_wins,
         key="k",
         newer_col="ocr",
         newer_wins_cols=("ocr", "status"),
         greatest_cols=("ins",),
-        num_buckets=16,
     )
+    upsert_partitioned(dw_path, delta, merge)
     return read_dw(spark, dw_path)
 
 

@@ -258,7 +258,8 @@ def stream_upsert_to_dw(
     incremental query: the file-source landing stream (checkpoint =
     processed-file ledger, S3/S10 native) feeds ``foreachBatch``,
     which runs the SAME batch merge operators (P3 clean -> U3 dedup ->
-    U1 newer-wins) against the typed DW and swaps it atomically.
+    U1 newer-wins) against the typed DW in its own layout
+    (``operators.pipeline.upsert_dw``).
 
     ``foreachBatch`` is the documented idiom for sinks Spark lacks —
     here MERGE on plain parquet. Semantics: a crashed batch re-runs
@@ -270,12 +271,12 @@ def stream_upsert_to_dw(
     Returns the started StreamingQuery; callers stop() it (or use
     ``processAllAvailable`` to drain in tests).
     """
-    from sftp_data_ingestion_spark.operators.pipeline import upsert_and_swap
+    from sftp_data_ingestion_spark.operators.pipeline import upsert_dw
 
     stream = stream_landing_csv(spark, landing_dir, sep, max_files_per_trigger)
     return (
         stream.writeStream.foreachBatch(
-            lambda batch_df, _batch_id: upsert_and_swap(batch_df, dw_path)
+            lambda batch_df, _batch_id: upsert_dw(batch_df, dw_path)
         )
         .option("checkpointLocation", checkpoint_dir)
         .start()

@@ -11,6 +11,8 @@ import sys
 from decimal import Decimal
 from types import SimpleNamespace
 
+import pytest
+
 from sftp_data_ingestion_spark import cli
 from sftp_data_ingestion_spark.cli import main
 
@@ -188,14 +190,34 @@ def test_upsert_without_bronze_is_noop(tmp_path):
     assert main(["upsert", "--warehouse", str(tmp_path / "empty_wh")]) == 0
 
 
-def test_upsert_bucketed_path(spark, tmp_path):
-    import os
+def _tree_state(path):
+    """Every file under ``path`` with its mtime: equal states mean
+    nothing was written, replaced or removed."""
+    return {
+        os.path.join(root, f): os.stat(os.path.join(root, f)).st_mtime_ns
+        for root, _dirs, files in os.walk(path)
+        for f in files
+    }
 
+
+def _load_fixture(tmp_path):
     remote = _setup_remote(tmp_path)
     landing = str(tmp_path / "novos")
     wh = str(tmp_path / "wh")
     assert main(["ingest", "--source", str(remote), "--landing", landing]) == 0
     assert main(["load", "--landing", landing, "--warehouse", wh]) == 0
+    return str(remote), landing, wh
+
+
+@pytest.mark.parametrize(
+    "second_run", ["upsert --buckets 8", "upsert", "run-all"],
+    ids=["upsert-buckets-8", "upsert", "run-all"],
+)
+def test_upsert_bucketed_path(spark, tmp_path, second_run):
+    """A DW laid out with --buckets keeps its layout: every later
+    stage-3 run, with or without the flag, merges through the pruned
+    path."""
+    remote, landing, wh = _load_fixture(tmp_path)
     # bootstrap lays out the bucketed DW
     assert main(["upsert", "--warehouse", wh, "--buckets", "8"]) == 0
     dw_dir = f"{wh}/dw"
@@ -203,11 +225,43 @@ def test_upsert_bucketed_path(spark, tmp_path):
     dw = spark.read.parquet(dw_dir)
     assert dw.drop("dw_bucket").count() == 2      # same DW as plain path
     # second run merges through the pruned path and stays idempotent
-    assert main(["upsert", "--warehouse", wh, "--buckets", "8"]) == 0
+    cmd, *flags = second_run.split()
+    paths = {"upsert": ["--warehouse", wh],
+             "run-all": ["--source", remote, "--landing", landing,
+                         "--warehouse", wh]}[cmd]
+    assert main([cmd, *paths, *flags]) == 0
     spark.catalog.refreshByPath(dw_dir)
     dw2 = {r["chave_nfe"]: r["pedido"]
            for r in spark.read.parquet(dw_dir).collect()}
     assert dw2[K1] == "P-1-upd" and len(dw2) == 2
+    assert os.path.exists(f"{dw_dir}/_buckets")
+
+
+@pytest.mark.parametrize(
+    "first, second", [("2", "3"), (None, "8")], ids=["bucketed", "plain"]
+)
+def test_conflicting_buckets_fail_and_write_nothing(spark, tmp_path, first, second):
+    """--buckets only lays out a new DW: a count that differs from the
+    DW's layout (a 2-bucket DW, or a plain one) raises before any
+    write, so the DW keeps one row per key and bronze stays for a
+    correct rerun."""
+    _remote, _landing, wh = _load_fixture(tmp_path)
+    assert main(["upsert", "--warehouse", wh,
+                 *(["--buckets", first] if first else [])]) == 0
+    before = _tree_state(f"{wh}/dw"), _tree_state(f"{wh}/bronze")
+    with pytest.raises(ValueError, match=f"not {second}"):
+        main(["upsert", "--warehouse", wh, "--buckets", second])
+    assert (_tree_state(f"{wh}/dw"), _tree_state(f"{wh}/bronze")) == before
+
+
+def test_bucketed_bootstrap_after_aborted_write(spark, tmp_path):
+    """A bootstrap write that died leaves only dw/_temporary; that is
+    no DW yet, so the next --buckets run lays the DW out again."""
+    _remote, _landing, wh = _load_fixture(tmp_path)
+    os.makedirs(f"{wh}/dw/_temporary/0")
+    assert main(["upsert", "--warehouse", wh, "--buckets", "8"]) == 0
+    assert os.path.exists(f"{wh}/dw/_buckets")
+    assert spark.read.parquet(f"{wh}/dw").count() == 2
 
 
 def test_curate_command(spark, tmp_path, capsys):

@@ -465,6 +465,29 @@ def test_missing_tables_have_one_open_policy():
     assert offenders == []
 
 
+def test_merge_policy_and_bucket_layout_have_one_home():
+    """Stage 3's column policies are bound once, in operators/pipeline,
+    and only operators/upsert_partitioned knows the bucketed layout: no
+    other module names the bucket column or re-spells the policies."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sftp_data_ingestion_spark"
+    homes = {
+        r"\b(NEWER_WINS_COLS|SET_ONCE_COLS)\b":
+            {"schemas.py", "operators/pipeline.py"},
+        r"\b(dw_bucket|BUCKET_COL)\b": {"operators/upsert_partitioned.py"},
+    }
+    offenders = [
+        f"{rel}: {pattern}"
+        for f in root.rglob("*.py")
+        for pattern, allowed in homes.items()
+        if (rel := str(f.relative_to(root))) not in allowed
+        and re.search(pattern, f.read_text())
+    ]
+    assert offenders == []
+
+
 def test_salted_agg_two_stage_shape(spark):
     """Salted aggregation: first shuffle on (key, salt) — uniform —
     then a tiny shuffle on key; never a single hot-key reducer."""
