@@ -1588,9 +1588,9 @@ def cdc_chunks_arrow(
     8 vectorized shift-multiply-mod passes per document instead of an
     interpreted O(len·window) HOF fold per row — the 10× probe caught
     the HOF engine at >20 min on 50k docs where this kernel takes
-    seconds. Same two-engine pattern as cosine_topk / cosine_topk_arrow:
-    the expression form stays the graded reference, this is the scale
-    path."""
+    seconds. Same two-engine pattern as cosine_topk / cosine_topk_arrow
+    (an expression form and an Arrow form); here the expression form
+    stays the graded reference, this is the scale path."""
     import re
 
     import pandas as pd

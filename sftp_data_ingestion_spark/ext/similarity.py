@@ -23,9 +23,10 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sftp_data_ingestion_spark.operators.dedup import latest_per_key
 from sftp_data_ingestion_spark.rebalance import cut, fan_out
 
 
@@ -120,13 +121,24 @@ def _norm_side(
     out_vec: str,
     out_norm: str,
     dim: int,
+    *extra: str,
 ) -> DataFrame:
     v = as_double(F.col(vec_col))
     return df.select(
         F.col(id_col).alias(out_id),
         v.alias(out_vec),
         _checked_norm(v, dim).alias(out_norm),
+        *extra,
     )
+
+
+def _global_topk(scored: DataFrame, k: int, score: str, out: str) -> DataFrame:
+    """The tail every top-k engine ends in: the first ``k`` candidates
+    per query by ``(score desc, neighbor_id asc)``, the score rounded
+    to 6 dp AFTER ranking (ranking uses full precision)."""
+    return latest_per_key(
+        scored, ["query_id"], [F.col(score).desc(), F.col("neighbor_id").asc()], k
+    ).select("query_id", "neighbor_id", F.round(score, 6).alias(out))
 
 
 def cosine_topk(
@@ -175,16 +187,106 @@ def cosine_topk(
         # comparison after CollapseProject inlines it
         .withColumn("__nd", F.monotonically_increasing_id())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("sim_full", 6).alias("sim")
+    return _global_topk(scored, k, "sim_full", "sim")
+
+
+def _row_norms(x):
+    """Per-row L2 norms of a float matrix, a zero norm read as 1.0."""
+    import numpy as np
+
+    n = np.sqrt((x * x).sum(axis=1))
+    n[n == 0.0] = 1.0
+    return n
+
+
+def _batch_matrix(vectors, dim: int | None = None):
+    """An Arrow batch's vector column as a float64 (rows x dim)
+    matrix; a ragged column, or one whose width is not ``dim``,
+    raises."""
+    import numpy as np
+
+    x = np.array(list(vectors), dtype=np.float64)
+    if x.ndim != 2 or (dim is not None and x.shape[1] != dim):
+        raise ValueError(
+            f"vector dim mismatch: expected {dim}, got "
+            f"{x.shape[1] if x.ndim == 2 else 'ragged'}"
         )
-    )
+    return x
+
+
+def _arrow_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    corpus_id: str,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    scorer,
+    out: str = "sim",
+) -> DataFrame:
+    """The one Arrow top-k kernel: every numpy engine below is this
+    helper plus a batch scorer (REPOSE's local-prune-then-global-merge
+    shape).
+
+    On the driver: both id columns must be integral (the kernel
+    carries ids as int64; schema only, no job), then the query set
+    collects as ``(q_ids, unit-norm matrix q)`` — a point-lookup query
+    set is small by construction, the same assumption the broadcast in
+    :func:`cosine_topk` makes. An empty query set returns an empty
+    typed frame. ``scorer(q_ids, q)`` returns ``score(pdf) -> (ids,
+    S)``: ``S`` is the batch x |Q| float64 score matrix, ``-inf`` for a
+    pair the scorer leaves out.
+
+    Per Arrow batch of ``corpus`` (on the scan's natural splits: a
+    matmul needs no extra parallelism, and pre-spreading a few-split
+    scan was measured to double the stage at sf0.1, 0.41 s -> 0.81 s),
+    self pairs drop and each query keeps its local top-k in the exact
+    ``(-score, id)`` order. The partition only finds each query's k-th
+    score; every row that reaches it is kept and sorted, so a tie AT
+    the boundary still goes to the smaller id (a cut inside
+    ``argpartition`` is arbitrary). The local and global criteria
+    agree, so the k·|Q| rows per batch hold the global top-k; the
+    corpus never shuffles, only those candidates do."""
+    import numpy as np
+
+    for side, frame, col in (
+        ("queries", queries, id_col), ("corpus", corpus, corpus_id)
+    ):
+        if not _integral_id(frame, col):
+            raise TypeError(
+                f"the Arrow top-k engines need an integral {col!r} on the "
+                f"{side} side (got {frame.schema[col].dataType.simpleString()}); "
+                "use cosine_topk for non-integral ids"
+            )
+    schema = f"query_id long, neighbor_id long, {out} double"
+    rows = queries.select(id_col, vec_col).collect()
+    if not rows:
+        return corpus.sparkSession.createDataFrame([], schema)
+    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
+    q = np.array([r[1] for r in rows], dtype=np.float64)
+    score = scorer(q_ids, q / _row_norms(q)[:, None])
+
+    def fn(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:  # empty partition: nothing to score
+                continue
+            ids, s = score(pdf)
+            s[ids[:, None] == q_ids[None, :]] = -np.inf  # self
+            top = min(k, len(ids))
+            at_k = np.argpartition(-s, top - 1, axis=0)[top - 1]
+            kth = s[at_k, np.arange(len(q_ids))]
+            r, c = np.nonzero((s >= kth) & (s > -np.inf))
+            order = np.lexsort((ids[r], -s[r, c], c))
+            r, c = r[order], c[order]
+            keep = np.arange(len(c)) - np.searchsorted(c, c) < k
+            r, c = r[keep], c[keep]
+            yield pd.DataFrame(
+                {"query_id": q_ids[c], "neighbor_id": ids[r], out: s[r, c]}
+            )
+
+    return _global_topk(corpus.mapInPandas(fn, schema), k, out, out)
 
 
 def cosine_topk_arrow(
@@ -193,7 +295,6 @@ def cosine_topk_arrow(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    batch_topk: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k via Arrow-batched numpy matmul — the
     HIGH-DIMENSION engine. :func:`cosine_topk`'s flat codegen chain is
@@ -202,97 +303,29 @@ def cosine_topk_arrow(
     compile-cost wall the unrolled SRP signatures did), while one
     numpy matmul per Arrow batch is dimension-oblivious and BLAS-fast.
 
-    Scale shape: the query matrix collects to the driver (a point-
-    lookup query set is small by construction — same assumption the
-    broadcast in :func:`cosine_topk` makes) and ships in the UDF
-    closure; each corpus partition computes (batch x dim)·(dim x Q)
-    and emits only its LOCAL top-k rows per query (k·Q rows per batch,
-    ties broken by neighbor id so local and global criteria agree);
-    a final window takes the global top-k over those candidates. The
-    corpus never shuffles; the shuffled intermediate is k·Q rows per
-    partition, independent of corpus size.
+    The kernel is :func:`_arrow_topk` (query matrix collected to the
+    driver, local top-k per corpus batch, one global window); the
+    scorer here is one (batch x dim)·(dim x Q) matmul.
 
     Same output contract as :func:`cosine_topk` (sim rounded to 6 dp
-    after ranking) for INTEGRAL id columns — the numpy kernel carries
-    ids as int64; BOTH sides' id dtypes are validated up front on the
-    driver (schema-only, no job), so a string corpus id fails here
-    with a clear message instead of as an opaque per-task numpy cast
-    error. Use the expression engine for non-integral ids. Scores come
-    from BLAS reductions, so the least significant float bits can
-    differ from the fold/flat engines — rankings agree except on exact
-    ties, which both engines break by neighbor id."""
+    after ranking) for INTEGRAL id columns; a non-integral id on either
+    side raises TypeError up front. Use the expression engine for
+    non-integral ids. Scores come from BLAS reductions, so the least
+    significant float bits can differ from the fold/flat engines —
+    rankings agree except on exact ties, which both engines break by
+    neighbor id."""
     import numpy as np
 
-    from pyspark.sql import types as T
+    def scorer(_q_ids, q):
+        def score(pdf):
+            c = _batch_matrix(pdf[vec_col])
+            sims = (c @ q.T) / _row_norms(c)[:, None]
+            return pdf[id_col].to_numpy(dtype=np.int64), sims
 
-    for side_name, frame in (("queries", queries), ("corpus", corpus)):
-        dtype = frame.schema[id_col].dataType
-        if not isinstance(
-            dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
-            raise TypeError(
-                f"cosine_topk_arrow needs an integral {id_col!r} on the "
-                f"{side_name} side (got {dtype.simpleString()}); use "
-                "cosine_topk for non-integral ids"
-            )
+        return score
 
-    rows = queries.select(id_col, vec_col).collect()
-    if not rows:
-        return cosine_topk(queries, corpus, k, id_col, vec_col, dim=1)
-    q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    q_norm[q_norm == 0.0] = 1.0
-    per_batch = batch_topk or k
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:  # empty partition: nothing to score
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.sqrt((c * c).sum(axis=1))
-            c_norm[c_norm == 0.0] = 1.0
-            sims = (c @ q_mat.T) / c_norm[:, None] / q_norm[None, :]
-            sims[ids[:, None] == q_ids[None, :]] = -np.inf  # self
-            out_q, out_n, out_s = [], [], []
-            top = min(per_batch, sims.shape[0])
-            for j in range(q_mat.shape[0]):
-                col = sims[:, j]
-                # partial select then exact order by (-sim, neighbor_id)
-                cand = np.argpartition(-col, top - 1)[:top]
-                cand = cand[np.lexsort((ids[cand], -col[cand]))]
-                for i in cand:
-                    if col[i] == -np.inf:
-                        continue
-                    out_q.append(q_ids[j])
-                    out_n.append(ids[i])
-                    out_s.append(col[i])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "sim_full": out_s}
-            )
-
-    # Kernel on the scan's NATURAL splits (same shape as the SRP
-    # signature kernel): the per-batch matmul needs no extra
-    # parallelism, and pre-spreading a few-split scan to every core
-    # was measured to double the stage at sf0.1 (0.41 s -> 0.81 s) —
-    # 32 sliver batches each paying the Python task round-trip where
-    # one fat batch pays it once. At scale the scan's own splits
-    # provide the parallelism (a fan_out would no-op anyway), and the
-    # kernel emits only k rows per (query, batch), so the downstream
-    # window never needs the corpus spread.
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        fn, "query_id long, neighbor_id long, sim_full double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
+    return _arrow_topk(
+        queries, corpus.select(id_col, vec_col), id_col, k, id_col, vec_col, scorer
     )
 
 
@@ -453,12 +486,7 @@ def _srp_bucket_frame(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if mat.ndim != 2 or mat.shape[1] != dim:
-                raise ValueError(
-                    f"vector dim mismatch: expected {dim}, got "
-                    f"{mat.shape[1] if mat.ndim == 2 else 'ragged'}"
-                )
+            mat = _batch_matrix(pdf[vec_col], dim)
             bits = (mat @ w_mat >= 0).astype(np.int64)  # rows x T*P
             parts = []
             for t in range(n_t):
@@ -505,19 +533,13 @@ def srp_topk(
         # side); the corpus side fans out AFTER the kernel so the
         # expensive stage — JVM pair scoring under the broadcast join —
         # uses every core. fan_out is a no-op at scale either way.
-        v = as_double(F.col(vec_col))
         sigs = _srp_bucket_frame(
             df, id_col, vec_col, n_planes, seed, n_tables, dim
         )
         if spread:
             sigs = fan_out(sigs)
-        return sigs.select(
-            F.col(id_col).alias(out_id),
-            v.alias(vec_alias),
-            _checked_norm(v, dim).alias(norm_alias),
-            "table_idx",
-            "bucket",
-        )
+        return _norm_side(sigs, id_col, vec_col, out_id, vec_alias,
+                          norm_alias, dim, "table_idx", "bucket")
 
     q = side(queries, "query_id", "qv", "qn")
     c = side(corpus, "neighbor_id", "cv", "cn", spread=True)
@@ -539,14 +561,7 @@ def srp_topk(
         # pairs meeting in several tables dedup here (key-only compare;
         # sim_full is identical across tables for the same pair)
         scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+    return _global_topk(scored, k, "sim_full", "sim")
 
 
 # ---------------------------------------------------------------------------
@@ -886,6 +901,37 @@ def kmeans_corpus_clusters(
     )
 
 
+def _probe_matrix(queries, centroids, nprobe, q_ids, id_col, vec_col):
+    """(n_cells x |Q|) bool: the cells each query probes, from
+    :func:`ivf_assign` (one collect of |Q| x nprobe rows)."""
+    import numpy as np
+
+    col = {int(qid): j for j, qid in enumerate(q_ids)}
+    probe = np.zeros((len(centroids), len(q_ids)), dtype=bool)
+    assigned = ivf_assign(
+        queries.select(id_col, vec_col), centroids, vec_col, nprobe
+    )
+    for qid, cell in assigned.select(id_col, "cell").collect():
+        probe[cell, col[qid]] = True
+    return probe
+
+
+def _probed(cell, probe, block):
+    """Batch x |Q| scores filled only where the query probes the row's
+    cell, ``-inf`` elsewhere: one ``block(rows, qs)`` call per cell
+    present in the batch, so IVF scores only its nprobe/n_cells share
+    of the pairs."""
+    import numpy as np
+
+    s = np.full((len(cell), probe.shape[1]), -np.inf)
+    for g in np.unique(cell):
+        rows = np.nonzero(cell == g)[0]
+        qs = np.nonzero(probe[g])[0]
+        if len(qs):
+            s[np.ix_(rows, qs)] = block(rows, qs)
+    return s
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -902,6 +948,16 @@ def ivf_topk(
     ~ nprobe/k_cells of the corpus — the inverted-file scale path
     (recall tunable via nprobe).
 
+    Scoring runs on :func:`_arrow_topk`: composing collects the |Q|
+    query vectors and their probe sets (:func:`ivf_assign`, |Q| x
+    nprobe rows) to the driver, as :func:`cosine_topk_arrow` collects
+    its queries; each corpus batch then runs one cosine matmul per
+    cell present, against the queries that probe it. The corpus never
+    shuffles and no join is planned. Ids ride the kernel as int64:
+    non-integral id columns raise TypeError up front, and
+    ``neighbor_id`` comes back as long. ``dim`` (default: the
+    centroids' width) is checked against every corpus batch.
+
     ``corpus_engine='arrow'`` runs the corpus-side cell assignment on
     :func:`kmeans_assign_arrow` (broadcast numpy centroid matrix, one
     BLAS matmul per Arrow batch) instead of the k x dim
@@ -916,10 +972,9 @@ def ivf_topk(
     dots (r13 ADVICE). That seam is invisible only when every cell is
     probed, so the arrow engine is REFUSED for ``nprobe < n_cells``
     (raise below): in that regime cell assignment is part of the
-    output contract and callers must keep the expr engine. Note the
-    arrow engine also narrows the id contract: ``neighbor_id`` comes
-    back as long (int64 kernel) and non-integral id columns raise
-    TypeError up front."""
+    output contract and callers must keep the expr engine."""
+    import numpy as np
+
     if not centroids:
         raise ValueError("ivf_topk: centroids is empty — need at least one cell")
     if dim is None:
@@ -932,74 +987,38 @@ def ivf_topk(
             "a corpus vector across the probe boundary and change the "
             "result; use the expression engine"
         )
-    qv = as_double(F.col(vec_col))
-    q = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"), vec_col),
-        centroids, vec_col, nprobe,
-    ).select("query_id", qv.alias("qv"), _checked_norm(qv, dim).alias("qn"), "cell")
     if corpus_engine == "arrow":
-        cvec = F.col("__v")
-        # Assignment kernel on the scan's NATURAL splits, spread AFTER
-        # (the SRP-side pattern): the matmul needs no extra
-        # parallelism and pre-spreading a few-split scan pays 32
-        # Python task round-trips for sliver batches (measured
-        # 0.53 s -> 0.41 s assign, 2.31 s -> 2.08 s full query at
-        # sf0.1). The JVM pair-scoring under the broadcast join IS
-        # per-row heavy, so the kernel output fans out by id — same
-        # exchange bytes the old pre-kernel fan_out paid, and a no-op
-        # at scale where the scan is already wide.
-        c = fan_out(
-            kmeans_assign_arrow(
-                corpus.select(F.col(id_col), F.col(vec_col)),
-                centroids, vec_col, id_col, keep_vec=True,
-            ),
-            "id",
+        cells = kmeans_assign_arrow(
+            corpus.select(id_col, vec_col), centroids, vec_col, id_col,
+            keep_vec=True,
         ).select(
-            F.col("id").alias("neighbor_id"),
-            cvec.alias("cv"),
-            _checked_norm(cvec, dim).alias("cn"),
+            F.col("id").alias(id_col),
+            F.col("__v").alias(vec_col),
             F.col("cluster_id").alias("cell"),
         )
     else:
-        c = ivf_assign(
-            fan_out(corpus).select(F.col(id_col).alias("neighbor_id"), vec_col),
-            centroids, vec_col, nprobe=1,
-        ).select("neighbor_id", qv.alias("cv"), _checked_norm(qv, dim).alias("cn"), "cell")
-    # Broadcast the probe side: an ANN lookup's query set (x nprobe
-    # replication) is the small side by construction, while a shuffle
-    # join on `cell` would funnel the whole corpus through k_cells
-    # reducer keys — a built-in skew bottleneck at any scale. With the
-    # broadcast, the corpus never moves: each task scores its local
-    # corpus slice against the probe table.
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _pair_sim(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn"), dim
-            ).alias("sim_full"),
+        # nprobe=1: each corpus vector lives in exactly ONE cell, so a
+        # (query, neighbor) pair meets at most once however many cells
+        # the query probes
+        cells = ivf_assign(
+            corpus.select(id_col, vec_col), centroids, vec_col, nprobe=1
         )
-        # no distinct: the corpus is assigned to exactly ONE cell
-        # (nprobe=1 above), so a (query, neighbor) pair meets in at
-        # most one probed cell even when the query probes several
-        #
-        # nondeterministic barrier (same trap jaccard_verify pins):
-        # without it CollapseProject inlines the flat-dot expression
-        # into the window's SortOrder, and the rank comparator then
-        # re-evaluates the 64-term dot per COMPARISON instead of
-        # reading the materialized column
-        .withColumn("__nd", F.monotonically_increasing_id())
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+
+    def scorer(q_ids, q):
+        probe = _probe_matrix(queries, centroids, nprobe, q_ids, id_col, vec_col)
+
+        def score(pdf):
+            c = _batch_matrix(pdf[vec_col], dim)
+            cn = _row_norms(c)
+            sims = _probed(
+                pdf["cell"].to_numpy(), probe,
+                lambda rows, qs: (c[rows] @ q[qs].T) / cn[rows, None],
+            )
+            return pdf[id_col].to_numpy(dtype=np.int64), sims
+
+        return score
+
+    return _arrow_topk(queries, cells, id_col, k, id_col, vec_col, scorer)
 
 
 def embedding_near_dup_pairs(
@@ -1021,21 +1040,15 @@ def embedding_near_dup_pairs(
     job at composition time — pass ``dim`` to stay lazy."""
     if dim is None:
         dim = _dim_of(df, vec_col)
-    v = as_double(F.col(vec_col))
     # all n_tables signatures in one Arrow kernel pass (one scan, one
     # matmul per batch — see _srp_bucket_frame) on the scan's natural
     # splits; the self-join below shuffles on (table_idx, bucket), so
     # pair scoring gets its parallelism from the exchange, not from
     # pre-spreading the kernel stage (which was measured to thrash the
     # Python worker pool on small inputs: 2 x 32 concurrent spawns)
-    sig = _srp_bucket_frame(
-        df, id_col, vec_col, n_planes, seed, n_tables, dim
-    ).select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        _checked_norm(v, dim).alias("n"),
-        "table_idx",
-        "bucket",
+    sig = _norm_side(
+        _srp_bucket_frame(df, id_col, vec_col, n_planes, seed, n_tables, dim),
+        id_col, vec_col, "id", "v", "n", dim, "table_idx", "bucket",
     )
     a, b = sig.alias("a"), sig.alias("b")
     scored = a.join(
@@ -1109,9 +1122,7 @@ def train_pq(
         .collect()
     )
     x = np.array([r["v"] for r in rows], dtype=np.float64)
-    norms = np.sqrt((x * x).sum(axis=1))
-    norms[norms == 0.0] = 1.0
-    x = x / norms[:, None]
+    x = x / _row_norms(x)[:, None]
     sub = dim // m
     codebook = []
     for j in range(m):
@@ -1161,15 +1172,8 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if x.ndim != 2 or x.shape[1] != dim:
-                raise ValueError(
-                    f"vector dim mismatch: expected {dim}, got "
-                    f"{x.shape[1] if x.ndim == 2 else 'ragged'}"
-                )
-            norms = np.sqrt((x * x).sum(axis=1))
-            norms[norms == 0.0] = 1.0
-            x = x / norms[:, None]
+            x = _batch_matrix(pdf[vec_col], dim)
+            x = x / _row_norms(x)[:, None]
             codes = np.empty((len(x), m), dtype=np.int16)
             for j in range(m):
                 xs = x[:, j * sub : (j + 1) * sub]
@@ -1187,6 +1191,24 @@ def pq_encode(
     return df.select(id_col, vec_col).mapInPandas(fn, out_schema)
 
 
+def _pq_luts(codebook, q):
+    """ADC lookup tables for the unit-norm query matrix ``q``:
+    ``luts[j][c, qi] = <q[qi] sub-vector j, centroid c of subspace j>``
+    (m x k_centroids x |Q|)."""
+    import numpy as np
+
+    sub = codebook[0].shape[1]
+    return np.stack(
+        [cb @ q[:, j * sub : (j + 1) * sub].T for j, cb in enumerate(codebook)]
+    )
+
+
+def _adc(luts, codes):
+    """ADC scores (rows x |Q|) of one-byte-code rows: m table lookups
+    per pair, summed — the original vectors are never touched."""
+    return sum(luts[j][codes[:, j]] for j in range(len(luts)))
+
+
 def pq_topk(
     queries: DataFrame,
     corpus_codes: DataFrame,
@@ -1195,76 +1217,29 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each query
-    precomputes an m x k_centroids inner-product lookup table
-    (driver-side — queries are the small side by construction), each
-    corpus partition scores its LOCAL codes with pure table lookups
-    (m adds per pair, never touching the original vectors) and emits
-    only its local top-k per query; a final window takes the global
-    top-k. The corpus never shuffles; the shuffled intermediate is
-    k x |Q| rows per partition regardless of corpus size. Approximate
-    by construction — grade with a recall gate against the exact
-    engine, never with value equality."""
+    """Asymmetric-distance (ADC) top-k over PQ codes on
+    :func:`_arrow_topk`: each query precomputes an m x k_centroids
+    inner-product lookup table (driver-side — queries are the small
+    side by construction), each corpus partition scores its LOCAL
+    codes with pure table lookups (m adds per pair, never touching the
+    original vectors) and emits only its local top-k per query; a
+    final window takes the global top-k. The corpus never shuffles;
+    the shuffled intermediate is k x |Q| rows per partition regardless
+    of corpus size. Approximate by construction — grade with a recall
+    gate against the exact engine, never with value equality."""
     import numpy as np
 
-    m = len(codebook)
-    sub = codebook[0].shape[1]
-    rows = queries.select(id_col, vec_col).collect()
-    if not rows:
-        return corpus_codes.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double"
-        )
-    q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    q = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    qn = np.sqrt((q * q).sum(axis=1))
-    qn[qn == 0.0] = 1.0
-    q = q / qn[:, None]
-    # luts[qi][j][c] = <query_sub_j, centroid_jc>
-    luts = np.stack(
-        [
-            np.stack(
-                [codebook[j] @ q[qi, j * sub : (j + 1) * sub] for j in range(m)]
-            )
-            for qi in range(len(q))
-        ]
-    )
+    def scorer(_q_ids, q):
+        luts = _pq_luts(codebook, q)
 
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["code_id"].to_numpy(dtype=np.int64)
+        def score(pdf):
             codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                # scores = sum over subspaces of table lookups
-                s = luts[qi][np.arange(m)[None, :], codes].sum(axis=1)
-                s[ids == q_ids[qi]] = -np.inf  # exclude self
-                top = min(k, len(s))
-                cand = np.argpartition(-s, top - 1)[:top]
-                cand = cand[np.lexsort((ids[cand], -s[cand]))]
-                for i in cand:
-                    if s[i] == -np.inf:
-                        continue
-                    out_q.append(q_ids[qi])
-                    out_n.append(ids[i])
-                    out_s.append(s[i])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
-            )
+            return pdf["code_id"].to_numpy(dtype=np.int64), _adc(luts, codes)
 
-    scored = corpus_codes.mapInPandas(
-        fn, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 6).alias("score"))
+        return score
+
+    return _arrow_topk(
+        queries, corpus_codes, "code_id", k, id_col, vec_col, scorer, "score"
     )
 
 
@@ -1333,14 +1308,7 @@ def rerank_exact(
             ).alias("sim_full"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+    return _global_topk(scored, k, "sim_full", "sim")
 
 
 def ivfpq_topk_rerank(
@@ -1376,8 +1344,6 @@ def ivfpq_topk_rerank(
 
     if dim is None:
         dim = _dim_of(corpus, vec_col, queries)
-    m = len(codebook)
-    sub = codebook[0].shape[1]
 
     coded = pq_encode(corpus, codebook, id_col, vec_col)
     cells = ivf_assign(
@@ -1389,78 +1355,23 @@ def ivfpq_topk_rerank(
     # persisted, so the join is a build-time cost, not a query cost
     indexed = coded.join(cells, "code_id")
 
-    q_assigned = ivf_assign(
-        queries.select(F.col(id_col).alias("qid"), vec_col),
-        centroids, vec_col, nprobe=nprobe,
-    )
-    probed: dict[int, set] = {}
-    for r in q_assigned.select("qid", "cell").collect():
-        probed.setdefault(r["qid"], set()).add(r["cell"])
+    def scorer(q_ids, q):
+        luts = _pq_luts(codebook, q)
+        probe = _probe_matrix(queries, centroids, nprobe, q_ids, id_col, vec_col)
 
-    rows = queries.select(id_col, vec_col).collect()
-    if not rows:
-        return rerank_exact(
-            queries, corpus,
-            queries.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long"
-            ),
-            k, id_col, vec_col, dim,
-        )
-    q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    q = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    qn = np.sqrt((q * q).sum(axis=1))
-    qn[qn == 0.0] = 1.0
-    q = q / qn[:, None]
-    luts = np.stack(
-        [
-            np.stack(
-                [codebook[j] @ q[qi, j * sub : (j + 1) * sub] for j in range(m)]
-            )
-            for qi in range(len(q))
-        ]
-    )
-    probe_sets = [
-        np.array(sorted(probed.get(int(qid), ())), dtype=np.int64)
-        for qid in q_ids
-    ]
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["code_id"].to_numpy(dtype=np.int64)
-            cell = pdf["cell"].to_numpy(dtype=np.int64)
+        def score(pdf):
             codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                mask = np.isin(cell, probe_sets[qi]) & (ids != q_ids[qi])
-                if not mask.any():
-                    continue
-                sel = np.nonzero(mask)[0]
-                s = luts[qi][np.arange(m)[None, :], codes[sel]].sum(axis=1)
-                top = min(shortlist, len(s))
-                cand = np.argpartition(-s, top - 1)[:top]
-                cand = cand[np.lexsort((ids[sel][cand], -s[cand]))]
-                out_q.extend([q_ids[qi]] * len(cand))
-                out_n.extend(ids[sel][cand])
-                out_s.extend(s[cand])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
+            s = _probed(
+                pdf["cell"].to_numpy(), probe,
+                lambda rows, qs: _adc(luts[:, :, qs], codes[rows]),
             )
+            return pdf["code_id"].to_numpy(dtype=np.int64), s
 
-    scored = indexed.mapInPandas(
-        fn, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
+        return score
+
+    cand = _arrow_topk(
+        queries, indexed, "code_id", shortlist, id_col, vec_col, scorer, "score"
+    ).select("query_id", "neighbor_id")
     return rerank_exact(queries, corpus, cand, k, id_col, vec_col, dim)
 
 
@@ -1571,15 +1482,9 @@ def semantic_contamination(
     # unit, blowing the Janino method limit (whole stage fell back to
     # interpreted) and costing an extra shuffle.
     def side(df, out_id, out_vec, out_norm):
-        v = as_double(F.col(vec_col))
-        return _srp_bucket_frame(
-            df, id_col, vec_col, n_planes, seed, n_tables, dim
-        ).select(
-            F.col(id_col).alias(out_id),
-            v.alias(out_vec),
-            _checked_norm(v, dim).alias(out_norm),
-            "table_idx",
-            "bucket",
+        return _norm_side(
+            _srp_bucket_frame(df, id_col, vec_col, n_planes, seed, n_tables, dim),
+            id_col, vec_col, out_id, out_vec, out_norm, dim, "table_idx", "bucket",
         )
 
     t = side(train, "train_id", "tv", "tn")
@@ -2015,12 +1920,7 @@ def kmeans_assign_arrow(
                 if len(part) == 0:
                     continue
                 ids = part[id_col].to_numpy(dtype=np.int64)
-                x = np.array(list(part[vec_col]), dtype=np.float64)
-                if x.shape[1] != c.shape[1]:
-                    raise ValueError(
-                        f"vector dim mismatch: centroids have "
-                        f"{c.shape[1]}, vectors have {x.shape[1]}"
-                    )
+                x = _batch_matrix(part[vec_col], c.shape[1])
                 cell, score = _argmax_rounded(x @ c.T, None, digits)
                 data = {"id": ids}
                 if keep_vec:
@@ -2103,12 +2003,7 @@ def coarse_assign_arrow(
                 if len(part) == 0:
                     continue
                 ids = part[id_col].to_numpy(dtype=np.int64)
-                x = np.array(list(part[vec_col]), dtype=np.float64)
-                if x.shape[1] != c.shape[1]:
-                    raise ValueError(
-                        f"vector dim mismatch: centroids have "
-                        f"{c.shape[1]}, vectors have {x.shape[1]}"
-                    )
+                x = _batch_matrix(part[vec_col], c.shape[1])
                 gkey = _round_half_up_vec(x @ gmat.T, digits) + offs
                 top = np.argsort(-gkey, axis=1)[:, :p]
                 probe_sets = np.sort(top, axis=1)

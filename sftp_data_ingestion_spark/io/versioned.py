@@ -41,6 +41,10 @@ from pyspark.sql import functions as F
 _VDIR = "_versions"
 
 
+class CommitConflict(RuntimeError):
+    """The head moved past the version a commit was computed from."""
+
+
 def _version_path(root: str, version: int) -> str:
     return os.path.join(root, _VDIR, f"v{version:08d}.json")
 
@@ -148,6 +152,7 @@ def commit(
     mode: str = "overwrite",
     stats_cols: list[str] | None = None,
     committed_at_ms: int | None = None,
+    read_version: int | None = None,
 ) -> int:
     """Commit ``df`` as a new version; returns the version number.
     ``committed_at_ms`` (default: now) is recorded in the manifest —
@@ -172,6 +177,13 @@ def commit(
     the head and retries at the next version. Data files are
     immutable and uniquely named, so a lost race wastes only the
     duplicate staging write, never corrupts the table.
+
+    ``read_version`` is the head ``df`` was computed from (a rewrite
+    of the table, like :func:`optimize`). Retrying such a commit would
+    publish it over whatever landed since and drop those rows, so when
+    the head is no longer ``read_version`` it raises
+    :class:`CommitConflict` and publishes nothing; its written files
+    stay unreferenced until :func:`vacuum`.
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown commit mode: {mode}")
@@ -185,6 +197,11 @@ def commit(
     while True:
         versions = _list_versions(root)
         head = versions[-1] if versions else 0
+        if read_version is not None and head != read_version:
+            raise CommitConflict(
+                f"{root}: head is v{head}, not the v{read_version} "
+                "this commit was computed from"
+            )
         target = head + 1
         files = list(new_files)
         stats = dict(new_stats)
@@ -446,10 +463,10 @@ def optimize(
     Readers of any existing snapshot are untouched (their files are
     immutable and still referenced until vacuum); the compaction
     itself is the coalesce rewrite of ``io/compact.py`` — every byte
-    moves exactly once, no shuffle — and a concurrent writer that
-    commits mid-compaction simply wins the next slot (the compacted
-    version then lands after it, containing the pre-commit data:
-    rerun optimize if churn outruns it). Returns the new version.
+    moves exactly once, no shuffle. A writer that commits
+    mid-compaction wins: the rewrite holds only the head it read, so
+    it raises :class:`CommitConflict` and publishes nothing (rerun
+    optimize). Returns the new version.
 
     ``cluster_cols`` turns the rewrite into a CLUSTERING optimize
     (Delta's ``OPTIMIZE ... ZORDER BY`` shape): files become disjoint
@@ -461,7 +478,8 @@ def optimize(
     versions_ = _list_versions(root)
     if not versions_:
         raise FileNotFoundError(f"no committed version under {root}")
-    m = _read_manifest(root, versions_[-1])
+    head = versions_[-1]
+    m = _read_manifest(root, head)
     paths = [os.path.join(root, f) for f in m["files"]]
     total = sum(os.path.getsize(p) for p in paths)
     n_files = max(1, round(total / target_file_bytes))
@@ -474,7 +492,9 @@ def optimize(
         df = df.coalesce(n_files)
     # clustering makes per-file ranges disjoint, so record the stats
     # that let read(prune=...) skip files on those columns
-    return commit(df, root, mode="overwrite", stats_cols=cluster_cols)
+    return commit(
+        df, root, mode="overwrite", stats_cols=cluster_cols, read_version=head
+    )
 
 
 def table_changes(

@@ -16,6 +16,7 @@ runs before the merge joins, so NULL keys never hit them.
 
 from __future__ import annotations
 
+import os
 from functools import partial
 
 from pyspark.sql import Column, DataFrame
@@ -92,24 +93,27 @@ def upsert_dw(staging: DataFrame, path: str, buckets: int | None = None) -> dict
     that many hash buckets; an existing DW keeps its layout (a differing
     ``buckets`` raises before any write) and picks the commit: a
     bucketed DW rewrites only the touched buckets, a plain one is
-    swapped in whole. Both merge joins of the swap read the delta, with
+    swapped in whole. A DW holding only its layout record (a bootstrap
+    whose keys were all NULL wrote no rows) bootstraps again in the
+    recorded layout. Both merge joins of the swap read the delta, with
     different column sets, so it is persisted until the swap is done."""
     dw = read_table(staging.sparkSession, path)
     delta = staging_to_delta(staging)
+    layout = bucket_layout(path) if os.path.exists(path) else None
+    if dw is not None or layout:
+        num_buckets = layout[1] if layout else None
+        if buckets is not None and buckets != num_buckets:
+            raise ValueError(f"{path} is laid out in {num_buckets or 'no'} "
+                             f"buckets, not {buckets}")
+        buckets = num_buckets
     if dw is None:
         if buckets is not None:
             n = write_dw_partitioned(delta, path, "chave_nfe", buckets)
             return {"dw_rows": n, "bootstrap": True, "buckets": buckets}
         dw = clean_staging(staging).limit(0)
-    else:
-        layout = bucket_layout(path)
-        num_buckets = layout[1] if layout else None
-        if buckets is not None and buckets != num_buckets:
-            raise ValueError(f"{path} is laid out in {num_buckets or 'no'} "
-                             f"buckets, not {buckets}")
-        if layout:
-            return {"buckets": num_buckets,
-                    **upsert_partitioned(path, delta, _upsert_pedidos)}
+    elif buckets is not None:
+        return {"buckets": buckets,
+                **upsert_partitioned(path, delta, _upsert_pedidos)}
     delta = delta.persist()
     try:
         return {"dw_rows": atomic_swap_parquet(_upsert_pedidos(dw, delta), path)}

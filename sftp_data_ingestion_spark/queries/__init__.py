@@ -171,6 +171,19 @@ REGRADE_FIRST: tuple[str, ...] = (
     "curation_pipeline",
     "z3_contrastive_triplets",
     "d_lsh_recall_measured",
+    # similarity top-k consumers: the Arrow engines share one kernel
+    # (ext/similarity._arrow_topk, exact tie order at the local
+    # cut), ivf_topk scores on it, and every top-k ends in the shared
+    # latest_per_key tail
+    "v_cosine_topk_bruteforce",
+    "v_ivf_ann_topk",
+    "v_ivf_ann_recall",
+    "v_srp_ann_topk",
+    "v_quantized_ann_recall",
+    "wh_pq_ann_topk",
+    "wh_ivfpq_ann_recall",
+    "wh_matryoshka_ann_recall",
+    "z3_hybrid_rrf_fusion",
 )
 
 

@@ -97,9 +97,10 @@ def v_srp_ann_topk(spark, sf_dir):
 def v_ivf_ann_topk(spark, sf_dir):
     """Inverted-file ANN graded variant: probes ALL cells (nprobe =
     n_cells), which is provably identical to exact search — the full
-    assign -> cell-join -> rescore machinery runs under the hash
-    oracle. Centroids are the cheap stride sample: with every cell
-    probed, centroid QUALITY cannot change the result, so paying for
+    assign -> probe -> masked-matmul machinery of the shared Arrow
+    top-k kernel runs under the hash oracle. Centroids are the cheap
+    stride sample: with every cell probed, centroid QUALITY cannot
+    change the result, so paying for
     k-means here would be dead cost in the benched query. The scale
     path (nprobe << n_cells + k-means centroids, where quality DOES
     matter) is graded by v_ivf_ann_recall and the recall thresholds in

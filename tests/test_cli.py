@@ -264,6 +264,30 @@ def test_bucketed_bootstrap_after_aborted_write(spark, tmp_path):
     assert spark.read.parquet(f"{wh}/dw").count() == 2
 
 
+def test_record_only_bucketed_dw_keeps_its_layout(spark, tmp_path):
+    """A --buckets bootstrap whose keys were all NULL writes no rows,
+    only dw/_buckets. The next plain run bootstraps in the recorded
+    layout instead of dropping it, and a different count still
+    raises."""
+    from pyspark.sql import functions as F
+
+    from sftp_data_ingestion_spark.operators.pipeline import upsert_dw
+
+    _remote, _landing, wh = _load_fixture(tmp_path)
+    dw_dir = f"{wh}/dw"
+    bronze = spark.read.parquet(f"{wh}/bronze")
+    null_keys = bronze.withColumn("chave_nfe", F.lit(None).cast("string"))
+    upsert_dw(null_keys, dw_dir, buckets=4)
+    assert not any(e.startswith("dw_bucket=") for e in os.listdir(dw_dir))
+    with pytest.raises(ValueError, match="not 8"):
+        upsert_dw(bronze, dw_dir, buckets=8)
+    assert upsert_dw(bronze, dw_dir)["buckets"] == 4
+    with open(f"{dw_dir}/_buckets") as f:
+        assert json.load(f)["num_buckets"] == 4
+    assert any(e.startswith("dw_bucket=") for e in os.listdir(dw_dir))
+    assert spark.read.parquet(dw_dir).count() == 2
+
+
 def test_curate_command(spark, tmp_path, capsys):
     import json
 

@@ -562,16 +562,33 @@ def test_weighted_mix_broadcasts_rates(spark):
 
 
 def test_ann_joins_broadcast_probe_side(spark):
-    """IVF and SRP must broadcast the (small) probe table: a shuffle
-    join on cell/bucket keys would funnel the whole corpus through
-    k_cells (or 2^n_planes) reducer keys — a built-in skew bottleneck
-    no cluster size fixes."""
+    """Neither ANN engine may shuffle the corpus on cell/bucket keys: a
+    shuffle join there would funnel the whole corpus through k_cells
+    (or 2^n_planes) reducer keys — a built-in skew bottleneck no
+    cluster size fixes. SRP broadcasts the (small) probe table; IVF
+    scores on the Arrow top-k kernel with the probe sets collected, so
+    it plans no join at all."""
     for name in ("v_ivf_ann_topk", "v_srp_ann_topk"):
-        df = q.QUERIES[name](spark, SF)
-        p = plan(df)
-        assert "BroadcastHashJoin" in p, name
+        p = plan(q.QUERIES[name](spark, SF))
+        if name == "v_ivf_ann_topk":
+            assert "MapInPandas" in p and "Join" not in p, name
+        else:
+            assert "BroadcastHashJoin" in p, name
         assert "Exchange hashpartitioning(cell" not in p, name
         assert "Exchange hashpartitioning(bucket" not in p, name
+
+
+def test_one_arrow_topk_kernel():
+    """One local top-k selection in the package (ext/similarity's
+    ``_arrow_topk``), and every similarity top-k ends in the shared
+    global tail, not a hand-written ``query_id`` window."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "sftp_data_ingestion_spark"
+    hits = sum(f.read_text().count("np.argpartition(") for f in root.rglob("*.py"))
+    assert hits == 1
+    similarity = (root / "ext" / "similarity.py").read_text()
+    assert 'Window.partitionBy("query_id")' not in similarity
 
 
 def test_salted_join_broadcasts_replicated_dim(spark):
@@ -634,10 +651,15 @@ def test_keyless_asof_range_partitions_time_axis(spark):
     # AQE's coalescePartitions folds the tiny fixture back to one
     # partition AFTER the parallel work (fine — that's its job on
     # small outputs); disable it here so the probe sees the operator's
-    # own partitioning, as a large input would.
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    # own partitioning, as a large input would. A fixed shuffle
+    # partition count keeps the plan off the host's core count.
+    confs = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         df = asof_join(clicks, purchases, on="ts", by=[])
         p = plan(df)
@@ -652,7 +674,8 @@ def test_keyless_asof_range_partitions_time_axis(spark):
         sizes = df.rdd.glom().map(len).collect()
         assert max(sizes) < sum(sizes)
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_scd2_and_cdc_single_key_shuffle(spark):
@@ -1040,6 +1063,9 @@ def test_aqe_skew_join_rewrite_fires_on_skewed_derivation(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "512k",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        # fixed, not the host's core count: with 2 partitions the
+        # median already includes the skewed one and nothing is split
+        "spark.sql.shuffle.partitions": "8",
     }
     prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():

@@ -104,13 +104,53 @@ def test_arrow_engine_matches_expression_engine(spark, emb):
 
 
 def test_arrow_engine_batch_topk_still_exact(spark, emb):
-    """Local per-batch top-k pruning cannot lose a global winner when
-    batch_topk >= k (every global top-k row is in its batch's local
-    top-k)."""
+    """Local per-batch top-k pruning cannot lose a global winner (every
+    global top-k row is in its batch's local top-k): a corpus split
+    over 16 partitions gives the answer of one whole batch."""
     queries = emb.where(F.col("vec_id") < 10)
-    small = sim.cosine_topk_arrow(queries, emb, k=3, batch_topk=3).collect()
-    wide = sim.cosine_topk_arrow(queries, emb, k=3, batch_topk=50).collect()
-    assert sorted(map(tuple, small)) == sorted(map(tuple, wide))
+    split = sim.cosine_topk_arrow(queries, emb.repartition(16), k=3).collect()
+    whole = sim.cosine_topk_arrow(queries, emb.coalesce(1), k=3).collect()
+    assert sorted(map(tuple, split)) == sorted(map(tuple, whole))
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_arrow_topk_breaks_exact_ties_by_id(spark, k):
+    """200 identical vectors in one partition, ids shuffled: every
+    score ties, so the top k are the k smallest ids, as the expression
+    engine and the oracle's ``ORDER BY sim DESC, vec_id ASC`` rank
+    them. A local top-k cut inside the tie (argpartition) picks
+    arbitrary ids. Duplicate PQ codes tie the ADC shortlist exactly
+    the same way."""
+    import random
+
+    rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(200)]
+    random.Random(7).shuffle(rows)
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    queries = corpus.where(F.col("vec_id") < 5)
+
+    def top(df):
+        return sorted(map(tuple, df.collect()))
+
+    want = top(sim.cosine_topk(queries, corpus, k=k, dim=4))
+    assert top(sim.cosine_topk_arrow(queries, corpus, k=k)) == want
+    cb = sim.train_pq(corpus, dim=4, m=2, k=2)
+    codes = sim.pq_encode(corpus, cb)
+    assert top(sim.pq_topk_rerank(
+        queries, corpus, codes, cb, k=k, shortlist=k, dim=4
+    )) == want
+
+
+def test_ivf_all_cells_query_equals_bruteforce_query(spark):
+    """v_ivf_ann_topk probes every cell, so on the shared kernel it
+    returns the brute-force query's rows exactly; both are graded by
+    the same exact top-k oracle."""
+    from sftp_data_ingestion_spark.queries import QUERIES
+
+    ivf = QUERIES["v_ivf_ann_topk"](spark, SF).collect()
+    brute = QUERIES["v_cosine_topk_bruteforce"](spark, SF).collect()
+    assert sorted(map(tuple, ivf)) == sorted(map(tuple, brute))
 
 
 def test_arrow_engine_survives_empty_partitions(spark, emb):

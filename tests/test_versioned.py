@@ -166,6 +166,29 @@ def test_optimize_compacts_files_as_new_version(spark, tmp_path):
     assert vt.read(spark, root, version=3).count() == 30
 
 
+def test_optimize_conflicts_with_a_commit_that_lands_mid_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """An append that commits while optimize rewrites the head it read
+    is not lost: optimize raises CommitConflict instead of publishing
+    the older head's rows over it."""
+    root = str(tmp_path / "t")
+    vt.commit(spark.range(10), root)
+    write = vt._write_data
+
+    def write_then_race(df, r):
+        files = write(df, r)
+        monkeypatch.setattr(vt, "_write_data", write)
+        vt.commit(spark.range(10, 15), root, mode="append")
+        return files
+
+    monkeypatch.setattr(vt, "_write_data", write_then_race)
+    with pytest.raises(vt.CommitConflict):
+        vt.optimize(spark, root)
+    assert vt.versions(root) == [1, 2]
+    assert vt.read(spark, root).count() == 15
+
+
 def test_streaming_foreachbatch_commits_versions(spark, tmp_path):
     """Composition: a file-source stream lands each micro-batch as an
     append COMMIT on the versioned table — exactly-once by checkpoint
